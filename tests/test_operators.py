@@ -485,6 +485,176 @@ def test_one_hop_enrichment_broadcasts_not_shuffles(spark):
     assert rows and all("neighbor_name" in r.asDict() for r in rows)
 
 
+_LINK_SCHEMA = (
+    "asset_link_id string, from_database_id string, from_asset_id string,"
+    " to_database_id string, to_asset_id string, relationship_type string"
+)
+
+
+def _one_hop_union_form(links, db, aid, assets, auth):
+    """The two-scan form single-scan ``one_hop`` replaced: out-edges
+    union in-edges, then a plain left join to the asset dim."""
+    is_pc = F.col("relationship_type") == "parentChild"
+    out_rows = links.filter(
+        (F.col("from_database_id") == db) & (F.col("from_asset_id") == aid)
+    ).select(
+        "asset_link_id",
+        F.col("to_database_id").alias("neighbor_database_id"),
+        F.col("to_asset_id").alias("neighbor_asset_id"),
+        F.when(is_pc, "child").otherwise("related").alias("relationship"),
+    )
+    in_rows = links.filter(
+        (F.col("to_database_id") == db) & (F.col("to_asset_id") == aid)
+    ).select(
+        "asset_link_id",
+        F.col("from_database_id").alias("neighbor_database_id"),
+        F.col("from_asset_id").alias("neighbor_asset_id"),
+        F.when(is_pc, "parent").otherwise("related").alias("relationship"),
+    )
+    neighbors = out_rows.unionByName(in_rows)
+    if assets is None:
+        return neighbors
+    dim = assets.select(
+        F.col("database_id").alias("neighbor_database_id"),
+        F.col("asset_id").alias("neighbor_asset_id"),
+        F.col("asset_name").alias("neighbor_name"),
+        auth.alias("_authz"),
+    )
+    return (
+        neighbors.join(dim, ["neighbor_database_id", "neighbor_asset_id"], "left")
+        .withColumn("authorized", F.coalesce("_authz", F.lit(False)))
+        .drop("_authz")
+    )
+
+
+def test_one_hop_single_scan_equals_union_form(spark):
+    """Single-scan ``one_hop`` returns the rows of the out ∪ in union it
+    replaced: a self-loop yields both its rows, a ``related`` edge in
+    each direction yields one row each, a neighbor missing from the
+    assets is unauthorized with no name, NULL endpoints and a NULL
+    relationship type match the union's NULL semantics."""
+    links = spark.createDataFrame(
+        [
+            ("l1", "d", "a", "d", "b", "parentChild"),   # child
+            ("l2", "d", "c", "d", "a", "parentChild"),   # parent
+            ("l3", "d", "a", "d", "a", "parentChild"),   # self-loop
+            ("l4", "d", "a", "d", "e", "related"),       # related, out
+            ("l5", "d", "e", "d", "a", "related"),       # related, in
+            ("l6", "d", "a", "d", "ghost", "related"),   # not in assets
+            ("l7", None, "a", "d", "f", "parentChild"),  # NULL from db
+            ("l8", "d", "a", "d", None, "parentChild"),  # NULL to asset
+            ("l9", None, None, "d", "a", "related"),     # NULL from side
+            ("l10", "d", "a", "d", "b", None),           # NULL type
+            ("l11", "d", "x", "d", "y", "related"),      # unrelated edge
+            ("l12", "d", "a", "d", "a", "related"),      # related self-loop
+        ],
+        _LINK_SCHEMA,
+    )
+    assets = spark.createDataFrame(
+        [("d", n, f"name_{n}", n != "c") for n in "abcef"],
+        "database_id string, asset_id string, asset_name string, ok boolean",
+    )
+
+    def rows(df):
+        return sorted((tuple(r) for r in df.collect()), key=repr)
+
+    for dim, auth in ((None, None), (assets, F.col("ok"))):
+        got = one_hop(links, "d", "a", assets=dim, auth_predicate=auth)
+        want = _one_hop_union_form(links, "d", "a", dim, auth)
+        assert got.columns == want.columns
+        assert rows(got) == rows(want)
+    got = {(r["asset_link_id"], r["relationship"]) for r in
+           one_hop(links, "d", "a").collect()}
+    assert {("l3", "child"), ("l3", "parent"), ("l4", "related"),
+            ("l5", "related"), ("l12", "related")} <= got
+    assert len(one_hop(links, "d", "a").filter("asset_link_id = 'l12'")
+               .collect()) == 2
+
+
+def _metadata_map_two_exchange_form(metadata):
+    keys = ["database_id", "asset_id"]
+    deduped = metadata.groupBy(*keys, "metadata_key").agg(
+        F.max("metadata_value").alias("metadata_value")
+    )
+    return deduped.groupBy(*keys).agg(
+        F.map_from_entries(
+            F.collect_list(F.struct("metadata_key", "metadata_value"))
+        ).alias("metadata")
+    )
+
+
+def test_metadata_map_one_exchange_equals_two_exchange_form(spark):
+    """``metadata_map`` aggregates twice over ONE entity-key exchange and
+    returns the maps of the two-exchange form: the max value wins per
+    duplicate key, NULL values are ignored by max, a key whose values
+    are all NULL maps to NULL, and an all-NULL entity still gets a row."""
+    from visual_asset_management_system_spark.operators.eav import metadata_map
+    from visual_asset_management_system_spark.plans.audit import exchange_count
+
+    md = spark.createDataFrame(
+        [
+            ("d", "a", "color", "red"),
+            ("d", "a", "color", "blue"),     # duplicate key: max wins
+            ("d", "a", "size", None),
+            ("d", "a", "size", "L"),         # NULL beside a value
+            ("d", "a", "empty", None),       # only NULLs
+            ("d", "a", "empty", None),
+            ("d", "b", "color", "green"),
+            ("d", "c", "gone", None),        # entity with only NULLs
+            ("e", "a", "color", "zz"),       # same asset id, other db
+        ],
+        "database_id string, asset_id string, metadata_key string,"
+        " metadata_value string",
+    )
+
+    def maps(df):
+        return sorted(
+            (r["database_id"], r["asset_id"], sorted(r["metadata"].items()))
+            for r in df.collect()
+        )
+
+    got = metadata_map(md)
+    assert maps(got) == maps(_metadata_map_two_exchange_form(md))
+    assert dict(maps(got)[0][2]) == {"color": "red", "size": "L", "empty": None}
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert exchange_count(plan) == 1, plan
+
+
+@pytest.mark.parametrize(
+    "prefix", ["", "r", "re", "red", "redd", "redde", "ta", "t", "zz", "q"]
+)
+def test_suggest_for_prefix_equals_index_filter(spark, prefix):
+    """The serving fallback returns exactly the rows the full suggest
+    index holds for the prefix: empty for "" and for prefixes longer
+    than ``max_prefix_len``, NULL names contribute nothing, and
+    frequency ties break by token."""
+    from visual_asset_management_system_spark.operators.inverted_index import (
+        build_suggest_index,
+        suggest_for_prefix,
+    )
+
+    names = spark.createDataFrame(
+        [(n,) for n in (
+            "Red reddish", "red REDDER", "redder reddest", "Redacted", None,
+            "tab tan", "tap tab", "tan tap", "tag", "taxi", "", "q",
+            "reddest-red red", None,
+        )],
+        "asset_name string",
+    )
+    want = [
+        tuple(r) for r in build_suggest_index(names, "asset_name")
+        .filter(F.col("prefix") == prefix).orderBy("rank").collect()
+    ]
+    got_df = suggest_for_prefix(names, "asset_name", prefix)
+    got = [tuple(r) for r in got_df.orderBy("rank").collect()]
+    assert got == want
+    assert got_df.dtypes == build_suggest_index(names, "asset_name").dtypes
+    if prefix in ("", "redde"):
+        assert got == []
+    if prefix == "ta":  # tab/tan/tap tie at 2: broken by token
+        assert [r[1] for r in got] == ["tab", "tan", "tap"]
+
+
 def test_bucketed_join_is_shuffle_free(spark, tmp_path):
     """Tables bucketed on the join key must sort-merge-join with NO
     Exchange on either side — the co-located layout the engine's big

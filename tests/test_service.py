@@ -5,7 +5,17 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from visual_asset_management_system_spark.models.search import SearchRequest
+import hashlib
+import uuid
+from urllib.parse import urlparse
+
+import pytest
+
+from visual_asset_management_system_spark.models.search import (
+    SearchFilter,
+    SearchRequest,
+    SortSpec,
+)
 from visual_asset_management_system_spark.operators.authz import (
     Constraint,
     Criterion,
@@ -411,3 +421,110 @@ def test_membership_filter_facade(spark):
         for r in svc.membership_probe(keys, bloom, "key", m=4096, depth=3).collect()
     }
     assert all(got.values()) and len(got) == 50
+
+
+# -- per-request Spark work ---------------------------------------------------
+
+def _jobs_and_tasks(spark, run) -> tuple[int, int]:
+    """(Spark jobs, tasks) that ``run()`` starts, counted through a job
+    group — a noise-proof cost: wall time depends on the host, the
+    number of jobs and tasks a request plans does not."""
+    sc = spark.sparkContext
+    group = f"budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "per-request budget")
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    tasks = 0
+    for j in jobs:
+        for st in tracker.getJobInfo(j).stageIds:
+            info = tracker.getStageInfo(st)
+            tasks += info.numTasks if info else 0
+    return len(jobs), tasks
+
+
+#: kind -> (request, max jobs, max tasks or None)
+_BUDGETS = {
+    "get_metadata": (lambda s: s.get_metadata("db_3", "asset_123"), 2, None),
+    "get_asset_links": (lambda s: s.get_asset_links("db_2", "asset_42"), 3, None),
+    "suggest": (lambda s: s.suggest("re"), 2, None),
+    "text": (lambda s: s.search(SearchRequest(
+        query="red", entity_types=("asset",), size=20)), 1, 2),
+    "filter": (lambda s: s.search(SearchRequest(
+        entity_types=("file",),
+        filters=[SearchFilter("file_ext", "eq", "glb"),
+                 SearchFilter("file_size", "gte", 1000)],
+        sort=[SortSpec("file_size", descending=True)], size=20)), 1, 2),
+    "metadata_query": (lambda s: s.search(SearchRequest(
+        metadata_query="status:F", entity_types=("asset",), size=20)), 1, 2),
+}
+
+
+@pytest.mark.parametrize("kind", sorted(_BUDGETS))
+@pytest.mark.parametrize("constrained", [False, True])
+def test_request_job_and_task_budget(spark, kind, constrained):
+    """Each serving request starts at most its budgeted Spark jobs (and,
+    for the full-scan searches, tasks): one job per lookup stage, and a
+    search table scan in as few tasks as its files need."""
+    allow = [Constraint("allow", "GET", (
+        Criterion("database_id", "is_in", ("db_2", "db_3", "db_6")),
+    ))]
+    svc = _svc(spark, allow if constrained else None)
+    request, max_jobs, max_tasks = _BUDGETS[kind]
+    request(svc).collect()  # first run: code generation, file listing
+    jobs, tasks = _jobs_and_tasks(spark, lambda: request(svc).collect())
+    assert 1 <= jobs <= max_jobs, (kind, jobs, tasks)
+    if max_tasks is not None:
+        assert tasks <= max_tasks, (kind, jobs, tasks)
+
+
+def test_search_tables_are_key_clustered(spark):
+    """The materialized search tables carry no bucket spec, and their
+    files hold sorted, non-overlapping (database_id, asset_id) ranges —
+    also when the write produces several files."""
+    import pyarrow.parquet as pq
+
+    from visual_asset_management_system_spark.operators.bucketing import (
+        drop_table,
+        write_clustered_table,
+    )
+
+    def key_ranges(df):
+        ranges = []
+        for f in df.inputFiles():
+            cols = pq.read_table(
+                urlparse(f).path, columns=["database_id", "asset_id"]
+            ).to_pydict()
+            keys = list(zip(cols["database_id"], cols["asset_id"]))
+            assert keys == sorted(keys), f
+            ranges.append((keys[0], keys[-1]))
+        ranges.sort()
+        assert all(a[1] < b[0] for a, b in zip(ranges, ranges[1:])), ranges
+        return ranges
+
+    t = tables(spark, SF)
+    tag = hashlib.md5(SF.encode()).hexdigest()[:8]
+    for name in ("search_assets", "search_files"):
+        desc = spark.sql(f"DESCRIBE TABLE EXTENDED {name}_{tag}").collect()
+        assert not [r for r in desc if r["col_name"] == "Num Buckets"], name
+        assert key_ranges(t[name])
+
+    # without AQE's coalescing the sort writes one file per shuffle
+    # partition — the many-file shape of a large table
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        write_clustered_table(
+            t["search_files"], "clustered_files", ["database_id", "asset_id"]
+        )
+        split = spark.table("clustered_files")
+        assert len(key_ranges(split)) > 1
+        assert split.count() == t["search_files"].count()
+    finally:
+        spark.conf.set(key, prev)
+        drop_table(spark, "clustered_files")

@@ -1,18 +1,26 @@
-"""Bucketed catalog storage — shuffle-free co-located joins.
+"""Catalog table layouts — bucketed and key-clustered.
 
-The engine's hottest join keys are the entity keys: files↔assets on
-(database_id, asset_id) for the file search build, metadata↔entities
-for the EAV map, versions↔assets for as-of reads. At 100 TB both sides
-of those joins are big, so the sort-merge join's two shuffles become
-the dominant cost. Writing the catalog tables BUCKETED on the entity
-key (hash-bucketed + sorted within buckets, Spark `bucketBy`) makes the
-join co-located: Catalyst sees matching output partitionings and plans
-a SortMergeJoin with NO Exchange on either side — the same layout a
+Bucketed (hash-bucketed + sorted within buckets, Spark ``bucketBy``):
+a table bucketed on a join key joins another bucketed on the same
+key/count as a co-located SortMergeJoin with NO Exchange on either
+side, and an equality filter on the key prunes the scan to the
+matching buckets. The BM25 postings (``inverted_index.write_postings``,
+bucketed on ``term``) are the materialized table that still uses it: a
+query's ``term IN (...)`` probe reads only its buckets. Bucket count is
+a layout constant (same for every table sharing the key) — choose it
+for the target cluster (e.g. 4× total cores), not the current data
+size; AQE cannot change it after write.
+
+Key-clustered (:func:`write_clustered_table`, a global sort on the
+key): what the search tables (search_assets / search_files, on
+(database_id, asset_id)) use. Their serving scans are filters, sorts
+and aggregations that never read a bucket spec, so a fixed bucket
+count only costs files: 32 buckets of a few KB each are 32 file opens
+spread over several tasks per request. A range-partitioned write lets
+AQE size the files to the data (one file at fixture scale, one key
+range per file at scale), and each file's parquet min/max statistics
+let a ``database_id`` filter skip files and row groups — the layout a
 Delta/Iceberg deployment gets from clustering keys.
-
-Bucket count is a layout constant (same for every table sharing the
-key) — choose it for the target cluster (e.g. 4× total cores), not the
-current data size; AQE cannot change it after write.
 """
 
 from __future__ import annotations
@@ -69,6 +77,17 @@ def write_bucketed_table(
     if path is not None:
         writer = writer.option("path", path)
     writer.saveAsTable(table_name)
+
+
+def write_clustered_table(
+    df: DataFrame, table_name: str, keys: list[str]
+) -> None:
+    """Persist ``df`` as a managed table globally sorted on ``keys``
+    (overwriting any previous version): each written file holds one
+    contiguous, non-overlapping key range, sized by AQE's advisory
+    partition size."""
+    drop_table(df.sparkSession, table_name)
+    df.orderBy(*keys).write.mode("overwrite").saveAsTable(table_name)
 
 
 def read_table(spark: SparkSession, table_name: str) -> DataFrame:

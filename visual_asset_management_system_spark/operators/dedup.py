@@ -753,10 +753,10 @@ def start_minhash_dedup_stream(
 # --------------------------------------------------------------------------
 #: Crossover for the int64 dictionary encoding of setsim items
 #: (estimated input plan bytes). Measured both directions in r15
-#: (scripts/probe_r15_setsim2.py, interleaved A/B with asserted
-#: bit-equality on the q_doc_setsim_join input): at the bench scale
-#: (estimate ~0.6 MB) the encode's two extra stages cost ~0.5 s of
-#: pure scheduling latency against KB-grade shuffle savings (0.88×);
+#: (scripts/probe_r15_setsim2.py at commit 4c8971f, interleaved A/B
+#: with asserted bit-equality on the q_doc_setsim_join input): at the
+#: bench scale (estimate ~0.6 MB) the encode's two extra stages cost
+#: ~0.5 s of pure scheduling latency against KB-grade shuffle savings (0.88×);
 #: at 10× (estimate ~6 MB) the narrowed shuffles win 1.14× (med) /
 #: 1.20× (min) and the margin grows with scale (§2.3 — bytes scale,
 #: stage-latency floor does not). 2 MiB is the measured midpoint.

@@ -8,7 +8,7 @@ collects them into a flat ``MD_`` object at indexing time
 
 Spark-native forms:
 - ``metadata_map``   — map<string,string> per entity (the MD_ object):
-  one shuffle (groupBy entity keys), map-side combinable.
+  one shuffle (hash on the entity keys) under both aggregation levels.
 - ``pivot_metadata`` — wide column-per-key form for a *known* key set;
   passing ``keys`` explicitly avoids Spark's two-pass pivot (the first
   pass is a distinct scan of all keys — at 100 TB that's a full extra
@@ -32,9 +32,17 @@ def metadata_map(
     value_col: str = "metadata_value",
     out_col: str = "metadata",
 ) -> DataFrame:
-    """Collapse EAV rows into one map column per entity."""
-    deduped = metadata.groupBy(*entity_keys, key_col).agg(
-        F.max(value_col).alias(value_col)
+    """Collapse EAV rows into one map column per entity.
+
+    Two-level aggregation on ONE exchange (the q21 form): a hash
+    repartition on the entity keys satisfies the clustering of both the
+    (entity, key) max and the per-entity collect, so neither aggregate
+    adds a shuffle of its own — one Exchange where grouping twice would
+    plan two (and, for a one-entity lookup, one Spark job fewer)."""
+    deduped = (
+        metadata.repartition(*entity_keys)
+        .groupBy(*entity_keys, key_col)
+        .agg(F.max(value_col).alias(value_col))
     )
     return deduped.groupBy(*entity_keys).agg(
         F.map_from_entries(

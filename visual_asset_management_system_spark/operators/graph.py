@@ -6,7 +6,8 @@ Reference semantics (assetLinksService.py:207-405):
 - descendants: recursive DFS over parentChild edges with per-branch
   cycle detection, authorization at each node.
 
-Spark re-expression: the 1-hop is two filtered self-joins + when();
+Spark re-expression: the 1-hop is one filtered scan of the edges that
+emits a row per matching direction;
 descendants is an iterative frontier-expansion BFS with an accumulated
 visited set (Spark has no native recursion — SURVEY §7 "Hard parts"),
 depth-capped (default 25). Each iteration is one join; the visited
@@ -55,23 +56,29 @@ def one_hop(
     )
     is_pc = F.col("relationship_type") == "parentChild"
 
-    out_rows = asset_links.filter(frm).select(
-        F.col("asset_link_id"),
-        F.col("to_database_id").alias("neighbor_database_id"),
-        F.col("to_asset_id").alias("neighbor_asset_id"),
-        F.when(is_pc, F.lit("child")).otherwise(F.lit("related")).alias(
-            "relationship"
-        ),
+    def side(cond: Column, end: str, pc_label: str) -> Column:
+        return F.when(cond, F.struct(
+            F.col("asset_link_id"),
+            F.col(f"{end}_database_id").alias("neighbor_database_id"),
+            F.col(f"{end}_asset_id").alias("neighbor_asset_id"),
+            F.when(is_pc, F.lit(pc_label)).otherwise(F.lit("related")).alias(
+                "relationship"
+            ),
+        ))
+
+    # ONE scan of the edges for both directions: each matching edge
+    # yields its out-row (asset is the source → neighbor is the target)
+    # and/or its in-row; a self-loop matches both sides and yields both,
+    # exactly like the out ∪ in union this replaces. A NULL endpoint
+    # makes that side's condition NULL, which neither filters in nor
+    # yields a row.
+    neighbors = (
+        asset_links.filter(frm | to)
+        .select(F.explode(F.array_compact(F.array(
+            side(frm, "to", "child"), side(to, "from", "parent"),
+        ))).alias("_n"))
+        .select("_n.*")
     )
-    in_rows = asset_links.filter(to).select(
-        F.col("asset_link_id"),
-        F.col("from_database_id").alias("neighbor_database_id"),
-        F.col("from_asset_id").alias("neighbor_asset_id"),
-        F.when(is_pc, F.lit("parent")).otherwise(F.lit("related")).alias(
-            "relationship"
-        ),
-    )
-    neighbors = out_rows.unionByName(in_rows)
     if assets is None:
         return neighbors
 
@@ -92,11 +99,10 @@ def one_hop(
     # the tiny neighbor key set (broadcast keys as the build side),
     # then LEFT OUTER with the now-tiny filtered dim as the broadcast
     # build side. Both joins are broadcast; the assets table is never
-    # shuffled.
+    # shuffled. The semi join's build side needs no distinct: a
+    # duplicate key cannot duplicate a left-semi output row.
     keys = ["neighbor_database_id", "neighbor_asset_id"]
-    dim_hits = dim.join(
-        F.broadcast(neighbors.select(*keys).distinct()), keys, "left_semi"
-    )
+    dim_hits = dim.join(F.broadcast(neighbors.select(*keys)), keys, "left_semi")
     enriched = neighbors.join(F.broadcast(dim_hits), keys, "left")
     if auth_predicate is not None:
         enriched = enriched.withColumn(
@@ -366,10 +372,10 @@ def descendants(
     the only dedup now, so a round of b levels pays b broadcast
     joins + ONE shuffle instead of b of each (planted-geometry A/B:
     0.62× on the bench fixture, identical rows on chain / diamond /
-    tree / fixture — scripts/probe3_r14.py). The per-level dedup was
-    also the safety bound against in-round PATH-MULTIPLICITY blowup
-    (a node reachable via k in-round paths now produces k rows that
-    keep multiplying through deeper levels — 2^levels on stacked
+    tree / fixture — scripts/probe3_r14.py at commit 4c8971f). The
+    per-level dedup was also the safety bound against in-round
+    PATH-MULTIPLICITY blowup (a node reachable via k in-round paths
+    now produces k rows that keep multiplying through deeper levels — 2^levels on stacked
     diamonds), so the round's stats action additionally sums per-node
     in-round path counts: when duplication (paths/nodes) exceeds
     ``dedup_guard_factor`` the remaining rounds — the geometrically

@@ -378,6 +378,50 @@ def build_suggest_index(
     )
 
 
+def suggest_for_prefix(
+    df: DataFrame,
+    text_col: str,
+    prefix: str,
+    max_prefix_len: int = 4,
+    k: int = 3,
+) -> DataFrame:
+    """The rows ``build_suggest_index(df, text_col, max_prefix_len, k)``
+    holds for one ``prefix`` — without building the index.
+
+    The serving fallback when no maintained suggest table exists: a
+    prefix's top-``k`` are the most frequent tokens that START with it
+    (ties by token), so only those tokens are counted, the top ``k``
+    taken, and ranked in the single partition the top-k leaves. The
+    index never holds a prefix shorter than 1 or longer than
+    ``max_prefix_len``; such a prefix gets no rows. Two Spark jobs
+    (the token count and the top-k), against the index build's prefix
+    explode, per-prefix rank and range sort."""
+    from pyspark.sql import Window
+
+    token = F.col("token")
+    hit = (
+        token.startswith(prefix)
+        if 1 <= len(prefix) <= max_prefix_len
+        else F.lit(False)
+    )
+    top = (
+        df.select(F.explode(tokenize(F.col(text_col))).alias("token"))
+        .filter(hit)
+        .groupBy("token")
+        .agg(F.count(F.lit(1)).alias("freq"))
+        .orderBy(F.desc("freq"), "token")
+        .limit(k)
+        .withColumn("prefix", F.lit(prefix))
+    )
+    w = Window.partitionBy("prefix").orderBy(F.desc("freq"), "token")
+    return top.select(
+        "prefix",
+        token.alias("suggestion"),
+        "freq",
+        F.row_number().over(w).cast("int").alias("rank"),
+    )
+
+
 def _token_counts(
     df: DataFrame, key_cols: list[str], text_col: str
 ) -> DataFrame:
@@ -512,7 +556,8 @@ def suggest_index_update(
     # explode + second distinct + token semi-join back (two full store
     # scans and a dictionary-sized shuffle per batch; r14 A/B at a
     # 200k-entity store: 0.80x wall, identical sink state —
-    # scripts/probe4_r14.py proves set equality both directions)
+    # scripts/probe4_r14.py at commit 4c8971f proves set equality
+    # both directions)
     aff1 = affected_prefixes.filter(F.length("prefix") == 1)
     cand = (
         updated.join(

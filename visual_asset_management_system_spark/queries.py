@@ -94,10 +94,11 @@ _tables_cache: dict[tuple[int, str], dict[str, DataFrame]] = {}
 
 
 def _materialize(
-    df: DataFrame, name: str, sf_dir: str, bucket_keys: list[str]
+    df: DataFrame, name: str, sf_dir: str,
+    write: Callable[[DataFrame, str], None],
 ) -> DataFrame:
-    """Write maintained state as an on-disk bucketed table (once per
-    session × sf_dir) and return the read-back scan.
+    """Write maintained state as an on-disk table (once per session ×
+    sf_dir) with ``write(df, table)`` and return the read-back scan.
 
     The search tables and the inverted index are MAINTAINED state in
     the architecture (CDC keeps them current — streaming/cdc.py); a
@@ -109,17 +110,23 @@ def _materialize(
     materialized table is also the honest deployment model: on a
     cluster these are parquet/Delta tables, not executor caches — every
     read is a plain FileScan of the artifact regardless of what else
-    ran. Bucketing keeps the layout the deployment would choose
-    (entity-key co-location / term pruning — operators/bucketing.py)."""
-    import hashlib
+    ran.
 
-    from .operators.bucketing import write_bucketed_table
+    Each caller picks the layout its readers use (operators/
+    bucketing.py): the search tables are key-clustered on
+    (database_id, asset_id) — AQE sizes the files, so a serving scan
+    opens as few files (and runs as few tasks) as the table's size
+    needs, and parquet min/max statistics prune ``database_id``
+    filters; no serving plan reads a bucket spec. The postings stay
+    bucketed on ``term``: a bm25 query's term lookup prunes to the
+    probed buckets and joins without a shuffle."""
+    import hashlib
 
     spark = df.sparkSession
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     table = f"{name}_{tag}"
     try:
-        write_bucketed_table(df, table, bucket_keys)
+        write(df, table)
     except Exception as exc:  # noqa: BLE001 — unwritable warehouse
         # (e.g. a read-only harness cwd under a vanilla session):
         # degrade to the cache model rather than failing every consumer
@@ -148,6 +155,12 @@ def _materialize(
     return spark.table(table)
 
 
+def _write_search_table(df: DataFrame, table: str) -> None:
+    from .operators.bucketing import write_clustered_table
+
+    write_clustered_table(df, table, ["database_id", "asset_id"])
+
+
 def tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Base tables + VAMS derived views + denormalized search tables."""
     key = (id(spark), sf_dir)
@@ -163,13 +176,13 @@ def tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
         build_search_assets(
             t["assets"], t["buckets"], t["metadata"], t["asset_links"]
         ),
-        "search_assets", sf_dir, ["database_id", "asset_id"],
+        "search_assets", sf_dir, _write_search_table,
     )
     t["search_files"] = _materialize(
         build_search_files(
             t["files"], t["assets"], t["file_metadata"], t["file_attributes"]
         ),
-        "search_files", sf_dir, ["database_id", "asset_id"],
+        "search_files", sf_dir, _write_search_table,
     )
     _tables_cache[key] = t
     return t
@@ -3338,10 +3351,12 @@ def asset_inverted_index(
             ["database_id", "asset_id"],
             DEFAULT_TEXT_FIELDS["asset"],
         )
-        t["asset_postings"] = _materialize(
-            postings, "asset_postings", sf_dir, ["term"]
-        )
         from .operators.bucketing import drop_table
+        from .operators.inverted_index import write_postings
+
+        t["asset_postings"] = _materialize(
+            postings, "asset_postings", sf_dir, write_postings
+        )
 
         tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
         try:

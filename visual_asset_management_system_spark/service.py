@@ -158,14 +158,18 @@ class CatalogService:
         """Type-ahead suggestions for one prefix — a point lookup. When
         the tables dict carries a CDC-maintained ``suggest`` table
         (suggest_index_update's sink), serve from it — the prefix
-        filter prunes to one hash partition; otherwise fall back to an
-        on-the-fly build over live entity names."""
-        index = self.t.get("suggest") or self.suggest_index(entity)
-        return (
-            index.filter(F.col("prefix") == prefix.lower())
-            .select("prefix", "suggestion", "freq", "rank")
-            .orderBy("rank")
-        )
+        filter prunes to one hash partition; otherwise compute that one
+        prefix's rows over live entity names (the rows the full index
+        build would hold for it, without building it)."""
+        from .operators.inverted_index import suggest_for_prefix
+
+        prefix = prefix.lower()
+        if "suggest" in self.t:
+            index = self.t["suggest"].filter(F.col("prefix") == prefix)
+        else:
+            src = self.t[f"{entity}s"].filter(~F.col("is_archived"))
+            index = suggest_for_prefix(src, "asset_name", prefix)
+        return index.select("prefix", "suggestion", "freq", "rank").orderBy("rank")
 
     def geo_search(
         self,

@@ -32,6 +32,17 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def driver_memory() -> str:
+    """``spark.driver.memory``: ``SPARK_DRIVER_MEMORY`` when set, else
+    half of physical RAM, capped at 24g. A fixed 24g lets the JVM heap
+    outgrow a smaller host's memory, and the kernel then kills the
+    process."""
+    if os.environ.get("SPARK_DRIVER_MEMORY"):
+        return os.environ["SPARK_DRIVER_MEMORY"]
+    phys_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 2**20
+    return f"{min(phys_mb // 2, 24 * 1024)}m"
+
+
 def get_spark(
     app_name: str = "spark-vams",
     master: str | None = None,
@@ -85,8 +96,9 @@ def get_spark(
         # local mode puts every executor thread + all persisted state in
         # the driver JVM: an undersized heap turns into sporadic multi-
         # second GC pauses on whichever query is running when it fills
-        # (measured 2.5s → 52s swings on the bucket self-join at 8g)
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        # (measured 2.5s → 52s swings on the bucket self-join at 8g); the
+        # default stays inside physical memory (driver_memory)
+        .config("spark.driver.memory", driver_memory())
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
