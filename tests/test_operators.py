@@ -626,7 +626,7 @@ def test_metadata_map_one_exchange_equals_two_exchange_form(spark):
 def test_suggest_for_prefix_equals_index_filter(spark, prefix):
     """The serving fallback returns exactly the rows the full suggest
     index holds for the prefix: empty for "" and for prefixes longer
-    than ``max_prefix_len``, NULL names contribute nothing, and
+    than ``SUGGEST_MAX_PREFIX_LEN``, NULL names contribute nothing, and
     frequency ties break by token."""
     from visual_asset_management_system_spark.operators.inverted_index import (
         build_suggest_index,

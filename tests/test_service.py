@@ -437,13 +437,19 @@ def _jobs_and_tasks(spark, run) -> tuple[int, int]:
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
+    # the status store is filled from the listener bus asynchronously:
+    # drain it so every job and stage of the request is visible
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
     tracker = sc.statusTracker()
     jobs = tracker.getJobIdsForGroup(group)
     tasks = 0
     for j in jobs:
-        for st in tracker.getJobInfo(j).stageIds:
+        job = tracker.getJobInfo(j)
+        assert job is not None, f"job {j} missing from the status store"
+        for st in job.stageIds:
             info = tracker.getStageInfo(st)
-            tasks += info.numTasks if info else 0
+            assert info is not None, f"stage {st} missing from the status store"
+            tasks += info.numTasks
     return len(jobs), tasks
 
 

@@ -18,9 +18,13 @@ and aggregations that never read a bucket spec, so a fixed bucket
 count only costs files: 32 buckets of a few KB each are 32 file opens
 spread over several tasks per request. A range-partitioned write lets
 AQE size the files to the data (one file at fixture scale, one key
-range per file at scale), and each file's parquet min/max statistics
-let a ``database_id`` filter skip files and row groups — the layout a
-Delta/Iceberg deployment gets from clustering keys.
+range per file at scale). The global sort costs the write one extra
+(range-sampling) job. Plain parquet tables keep no file-level
+statistics, so a ``database_id`` filter still opens every file; the
+parquet reader can only skip row groups by their min/max statistics.
+That the sorted layout prunes row groups for such filters is not
+measured. Skipping whole files needs a table format with file
+statistics (Delta/Iceberg clustering keys).
 """
 
 from __future__ import annotations

@@ -335,11 +335,18 @@ def phrase_expr(col: Column, terms: list[str]) -> Column:
     return F.exists(starts, lambda i: F.slice(toks, i, k) == want)
 
 
+# the completion suggester's shape: prefixes of 1..4 characters, top 3
+# tokens per prefix — shared by the index build and the one-prefix
+# serving fallback so the two return the same rows by construction
+SUGGEST_MAX_PREFIX_LEN = 4
+SUGGEST_K = 3
+
+
 def build_suggest_index(
     df: DataFrame,
     text_col: str,
-    max_prefix_len: int = 4,
-    k: int = 3,
+    max_prefix_len: int = SUGGEST_MAX_PREFIX_LEN,
+    k: int = SUGGEST_K,
 ) -> DataFrame:
     """Prefix-completion suggest index: (prefix, suggestion, freq, rank)
     with the top-``k`` corpus tokens per prefix — the OpenSearch
@@ -378,22 +385,16 @@ def build_suggest_index(
     )
 
 
-def suggest_for_prefix(
-    df: DataFrame,
-    text_col: str,
-    prefix: str,
-    max_prefix_len: int = 4,
-    k: int = 3,
-) -> DataFrame:
-    """The rows ``build_suggest_index(df, text_col, max_prefix_len, k)``
-    holds for one ``prefix`` — without building the index.
+def suggest_for_prefix(df: DataFrame, text_col: str, prefix: str) -> DataFrame:
+    """The rows ``build_suggest_index(df, text_col)`` holds for one
+    ``prefix`` — without building the index.
 
     The serving fallback when no maintained suggest table exists: a
-    prefix's top-``k`` are the most frequent tokens that START with it
-    (ties by token), so only those tokens are counted, the top ``k``
-    taken, and ranked in the single partition the top-k leaves. The
-    index never holds a prefix shorter than 1 or longer than
-    ``max_prefix_len``; such a prefix gets no rows. Two Spark jobs
+    prefix's top ``SUGGEST_K`` are the most frequent tokens that START
+    with it (ties by token), so only those tokens are counted, the top
+    ones taken, and ranked in the single partition the top-k leaves.
+    The index never holds a prefix shorter than 1 or longer than
+    ``SUGGEST_MAX_PREFIX_LEN``; such a prefix gets no rows. Two Spark jobs
     (the token count and the top-k), against the index build's prefix
     explode, per-prefix rank and range sort."""
     from pyspark.sql import Window
@@ -401,7 +402,7 @@ def suggest_for_prefix(
     token = F.col("token")
     hit = (
         token.startswith(prefix)
-        if 1 <= len(prefix) <= max_prefix_len
+        if 1 <= len(prefix) <= SUGGEST_MAX_PREFIX_LEN
         else F.lit(False)
     )
     top = (
@@ -410,7 +411,7 @@ def suggest_for_prefix(
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("freq"))
         .orderBy(F.desc("freq"), "token")
-        .limit(k)
+        .limit(SUGGEST_K)
         .withColumn("prefix", F.lit(prefix))
     )
     w = Window.partitionBy("prefix").orderBy(F.desc("freq"), "token")
@@ -450,8 +451,8 @@ def suggest_index_update(
     batch_key: str,
     key_cols: list[str] = ("database_id", "asset_id"),
     text_col: str = "asset_name",
-    max_prefix_len: int = 4,
-    k: int = 3,
+    max_prefix_len: int = SUGGEST_MAX_PREFIX_LEN,
+    k: int = SUGGEST_K,
 ) -> DataFrame:
     """One incremental maintenance step of the completion-suggest index
     — the CDC story of :func:`build_suggest_index`, so the type-ahead

@@ -116,10 +116,11 @@ def _materialize(
     bucketing.py): the search tables are key-clustered on
     (database_id, asset_id) — AQE sizes the files, so a serving scan
     opens as few files (and runs as few tasks) as the table's size
-    needs, and parquet min/max statistics prune ``database_id``
-    filters; no serving plan reads a bucket spec. The postings stay
-    bucketed on ``term``: a bm25 query's term lookup prunes to the
-    probed buckets and joins without a shuffle."""
+    needs; no serving plan reads a bucket spec. A ``database_id``
+    filter still opens every file: only row-group skipping by parquet
+    min/max statistics is possible, and it is not measured. The
+    postings stay bucketed on ``term``: a bm25 query's term lookup
+    prunes to the probed buckets and joins without a shuffle."""
     import hashlib
 
     spark = df.sparkSession

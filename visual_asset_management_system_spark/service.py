@@ -151,8 +151,11 @@ class CatalogService:
         maintained state exactly like the search tables."""
         from .operators.inverted_index import build_suggest_index
 
-        src = self.t[f"{entity}s"].filter(~F.col("is_archived"))
-        return build_suggest_index(src, text_col)
+        return build_suggest_index(self._suggest_source(entity), text_col)
+
+    def _suggest_source(self, entity: str) -> DataFrame:
+        """The rows that feed the suggester: live entity names."""
+        return self.t[f"{entity}s"].filter(~F.col("is_archived"))
 
     def suggest(self, prefix: str, entity: str = "asset") -> DataFrame:
         """Type-ahead suggestions for one prefix — a point lookup. When
@@ -167,8 +170,9 @@ class CatalogService:
         if "suggest" in self.t:
             index = self.t["suggest"].filter(F.col("prefix") == prefix)
         else:
-            src = self.t[f"{entity}s"].filter(~F.col("is_archived"))
-            index = suggest_for_prefix(src, "asset_name", prefix)
+            index = suggest_for_prefix(
+                self._suggest_source(entity), "asset_name", prefix
+            )
         return index.select("prefix", "suggestion", "freq", "rank").orderBy("rank")
 
     def geo_search(
