@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import tempfile
+import uuid
 
 import pytest
 
@@ -49,3 +50,39 @@ def py4j_calls(monkeypatch):
 
     monkeypatch.setattr(JavaClient, "send_command", counting)
     return counter
+
+
+@pytest.fixture
+def jobs_and_tasks(spark):
+    """``count(run) -> (Spark jobs, tasks)`` that ``run()`` starts,
+    counted through a job group — a noise-proof cost: wall time depends
+    on the host, the number of jobs and tasks a call plans does not.
+    The one way job budgets are counted across the suite."""
+    sc = spark.sparkContext
+
+    def count(run) -> tuple[int, int]:
+        group = f"budget-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "job budget")
+        try:
+            run()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        # the status store is filled from the listener bus
+        # asynchronously: drain it so every job and stage is visible
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        tracker = sc.statusTracker()
+        jobs = tracker.getJobIdsForGroup(group)
+        tasks = 0
+        for j in jobs:
+            job = tracker.getJobInfo(j)
+            assert job is not None, f"job {j} missing from the status store"
+            for st in job.stageIds:
+                info = tracker.getStageInfo(st)
+                assert info is not None, (
+                    f"stage {st} missing from the status store"
+                )
+                tasks += info.numTasks
+        return len(jobs), tasks
+
+    return count

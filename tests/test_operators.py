@@ -763,6 +763,25 @@ def test_simhash_hamming_bounds(spark):
     assert all((i, i + 1000000) in exact for i in range(60))
 
 
+def test_simhash_signatures_py4j_budget(spark, py4j_calls):
+    """A warm ``simhash_signatures`` call builds its 32 per-bit sums and
+    the 32-term signature packing once per ``bits``: the driver-side
+    cost of a call does not grow with the signature width."""
+    from visual_asset_management_system_spark.operators.dedup import (
+        simhash_signatures,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, "a b c d"), (2, "e f g")], "doc_id long, text string"
+    )
+    first = sorted(tuple(r) for r in simhash_signatures(docs).collect())
+    before = py4j_calls.n
+    warm = simhash_signatures(docs)
+    calls = py4j_calls.n - before
+    assert calls <= 300, f"{calls} py4j round trips for a warm call"
+    assert sorted(tuple(r) for r in warm.collect()) == first
+
+
 def test_simhash_bucket_cap_drops_duplicate_floods(spark):
     docs = tables(spark, SF)["documents"].select("doc_id", "text").limit(20)
     flood = spark.createDataFrame(
@@ -1443,6 +1462,198 @@ def test_minhash_index_update_equals_from_scratch(spark, tmp_path):
         assert not (new & got), "a pair was emitted twice"
         got |= new
     assert got == want
+
+
+def _minhash_probe_three_join_form(
+    spark, store_dir, sig_new, threshold, exclude_batch, num_hashes=64, bands=16
+):
+    """The probe verification the fused band-join check replaced:
+    distinct candidates from the band join, then two joins back to the
+    whole signature relation (``sig_a``/``sig_b``) to estimate Jaccard.
+    ``store_dir=None`` is a probe with no store yet."""
+    from visual_asset_management_system_spark.operators.dedup import _banded
+
+    sig_all = sig_new
+    if store_dir is not None:
+        id_type = sig_new.schema["id"].dataType.simpleString()
+        stored = spark.read.schema(
+            f"id {id_type}, sig array<bigint>, batch_key string"
+        ).parquet(store_dir)
+        stored = stored.filter(
+            F.col("batch_key").isNull() | (F.col("batch_key") != exclude_batch)
+        )
+        sig_all = stored.select("id", "sig").unionByName(sig_new)
+    rows_per_band = num_hashes // bands
+    banded_new = _banded(sig_new, bands, rows_per_band)
+    banded_all = _banded(sig_all, bands, rows_per_band)
+    cands = (
+        F.broadcast(banded_new).alias("l")
+        .join(
+            banded_all.alias("r"),
+            (F.col("l.band") == F.col("r.band"))
+            & (F.col("l.band_hash") == F.col("r.band_hash"))
+            & (F.col("l.id") != F.col("r.id")),
+        )
+        .select(
+            F.least("l.id", "r.id").alias("id_a"),
+            F.greatest("l.id", "r.id").alias("id_b"),
+        )
+        .distinct()
+    )
+    sig_a = sig_all.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
+    sig_b = sig_all.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
+    matches = F.aggregate(
+        F.zip_with("sig_a", "sig_b", lambda x, y: F.when(x == y, 1).otherwise(0)),
+        F.lit(0),
+        lambda acc, v: acc + v,
+    )
+    return (
+        cands.join(sig_a, "id_a")
+        .join(sig_b, "id_b")
+        .withColumn("jaccard", F.round(matches / F.lit(num_hashes), 6))
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
+    )
+
+
+def test_minhash_probe_fused_equals_three_join_form(spark, tmp_path):
+    """The probe that verifies candidates on the band-join rows returns,
+    after ``distinct``, the (id_a, id_b, jaccard) set of the three-join
+    form it replaced: with store rows duplicated by a replayed append,
+    a store written before ``batch_key`` existed, a pair sharing all 16
+    bands, a pair sharing a band below the threshold, a new-new pair,
+    and docs of fewer than 3 tokens (no shingles, no signature)."""
+    from visual_asset_management_system_spark.operators.dedup import (
+        _append_signatures,
+        _minhash_probe,
+        minhash_signatures,
+    )
+
+    base = " ".join(f"w{i}" for i in range(40))
+    other = " ".join(f"v{i}" for i in range(40))
+    # base's first 36 words: shares 4 bands with it but estimates
+    # 0.75, under the 0.8 threshold
+    part = " ".join(f"w{i}" for i in range(36)) + " u0 u1 u2 u3"
+    store_rows = [(1, base), (2, other), (3, "too short"), (4, "x")]
+    schema = "doc_id long, text string"
+    sig_store = minhash_signatures(spark.createDataFrame(store_rows, schema))
+
+    keyed = str(tmp_path / "keyed")
+    _append_signatures(sig_store, keyed, "b0")
+    _append_signatures(sig_store, keyed, "b0")  # a replayed append
+    legacy = str(tmp_path / "legacy")  # predates the batch_key column
+    sig_store.write.parquet(legacy)
+
+    batch = spark.createDataFrame(
+        [
+            (10, base),                      # all 16 bands with doc 1
+            (11, part),                      # a band with 1, below 0.8
+            (12, other + " v40"),            # near doc 2
+            (13, other + " v40 v41"),        # new-new pair with 12
+            (14, "a b"),                     # fewer than 3 tokens
+        ],
+        schema,
+    )
+
+    def rows(df):
+        return {(r["id_a"], r["id_b"], r["jaccard"]) for r in df.collect()}
+
+    for store in (keyed, legacy, None):
+        for threshold in (0.0, 0.8):
+            fused, sig_new = _minhash_probe(
+                spark,
+                store if store is not None else str(tmp_path / "empty"),
+                batch,
+                threshold=threshold,
+                exclude_batch="b1",
+            )
+            got = rows(fused.distinct())
+            want = rows(
+                _minhash_probe_three_join_form(
+                    spark, store, sig_new, threshold, exclude_batch="b1"
+                )
+            )
+            assert got == want, (store, threshold)
+            ids = {(a, b) for a, b, _ in got}
+            assert (12, 13) in ids
+            assert not any(14 in p or 3 in p or 4 in p for p in ids)
+            if store is not None:
+                assert (1, 10, 1.0) in got
+                assert ((1, 11) in ids) == (threshold == 0.0)
+    # raw matches repeat once per shared band (and per replayed row)
+    raw, _ = _minhash_probe(spark, keyed, batch, threshold=0.8, exclude_batch="b1")
+    assert raw.filter("id_a = 1 AND id_b = 10").count() == 2 * 16
+
+
+def _rejects_two_left_join_form(pairs, batch, id_col):
+    """The reject marking the one-membership-test rule replaced: two
+    left joins tag each pair side as in-batch, the later / store-facing
+    batch side loses, NULLs dropped, distinct."""
+    in_batch = batch.select(F.col(id_col).alias("_bid")).withColumn(
+        "_in_batch", F.lit(True)
+    )
+    marked = pairs.join(
+        in_batch.select(F.col("_bid").alias("id_a"), F.col("_in_batch").alias("_a_in")),
+        "id_a",
+        "left",
+    ).join(
+        in_batch.select(F.col("_bid").alias("id_b"), F.col("_in_batch").alias("_b_in")),
+        "id_b",
+        "left",
+    )
+    return (
+        marked.select(
+            F.when(F.col("_b_in").isNotNull(), F.col("id_b"))
+            .when(F.col("_a_in").isNotNull(), F.col("id_a"))
+            .alias(id_col)
+        )
+        .filter(F.col(id_col).isNotNull())
+        .distinct()
+    )
+
+
+def test_near_dup_rejects_equal_two_left_join_form(spark):
+    """One broadcast membership test on id_b picks the same losers as
+    the two-left-join form for every pair with a batch-side doc: a
+    store id equal to a batch id, duplicate ids within the batch, and
+    an empty pair set."""
+    from visual_asset_management_system_spark.operators.corpus import (
+        _near_dup_rejects,
+    )
+
+    batch = spark.createDataFrame(
+        [(5, "a"), (7, "b"), (9, "c"), (9, "c2"), (20, "d")],
+        "doc_id long, text string",
+    )
+    pair_schema = "id_a long, id_b long, jaccard double"
+    pairs = spark.createDataFrame(
+        [
+            (3, 5, 0.9),    # store partner, lower id: 5 loses
+            (5, 12, 0.9),   # store partner, higher id: 5 loses
+            (5, 7, 0.9),    # within the batch: 7 loses
+            (5, 7, 0.9),    # repeated raw match
+            (7, 12, 0.6),   # 7 is also a store id
+            (3, 7, 0.7),    # store 3 vs batch 7
+            (9, 30, 0.8),   # duplicate batch id 9 vs store 30
+            (1, 9, 0.8),    # store 1 vs duplicate batch id 9
+        ],
+        pair_schema,
+    )
+    empty = spark.createDataFrame([], pair_schema)
+
+    def ids(df):
+        return sorted({r["doc_id"] for r in df.collect()})
+
+    for p in (pairs, empty):
+        got = _near_dup_rejects(p, batch, "doc_id")
+        want = _rejects_two_left_join_form(p, batch, "doc_id")
+        assert ids(got) == ids(want)
+        accepted = batch.join(F.broadcast(got), "doc_id", "left_anti")
+        assert sorted(r["doc_id"] for r in accepted.collect()) == sorted(
+            r["doc_id"] for r in batch.join(want, "doc_id", "left_anti").collect()
+        )
+    assert ids(_near_dup_rejects(pairs, batch, "doc_id")) == [5, 7, 9]
+    assert ids(_near_dup_rejects(empty, batch, "doc_id")) == []
 
 
 def test_exact_duplicate_groups_bounded_mode(spark):

@@ -6,7 +6,6 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 import hashlib
-import uuid
 from urllib.parse import urlparse
 
 import pytest
@@ -425,34 +424,6 @@ def test_membership_filter_facade(spark):
 
 # -- per-request Spark work ---------------------------------------------------
 
-def _jobs_and_tasks(spark, run) -> tuple[int, int]:
-    """(Spark jobs, tasks) that ``run()`` starts, counted through a job
-    group — a noise-proof cost: wall time depends on the host, the
-    number of jobs and tasks a request plans does not."""
-    sc = spark.sparkContext
-    group = f"budget-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "per-request budget")
-    try:
-        run()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    # the status store is filled from the listener bus asynchronously:
-    # drain it so every job and stage of the request is visible
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    tracker = sc.statusTracker()
-    jobs = tracker.getJobIdsForGroup(group)
-    tasks = 0
-    for j in jobs:
-        job = tracker.getJobInfo(j)
-        assert job is not None, f"job {j} missing from the status store"
-        for st in job.stageIds:
-            info = tracker.getStageInfo(st)
-            assert info is not None, f"stage {st} missing from the status store"
-            tasks += info.numTasks
-    return len(jobs), tasks
-
-
 #: kind -> (request, max jobs, max tasks or None)
 _BUDGETS = {
     "get_metadata": (lambda s: s.get_metadata("db_3", "asset_123"), 2, None),
@@ -472,7 +443,7 @@ _BUDGETS = {
 
 @pytest.mark.parametrize("kind", sorted(_BUDGETS))
 @pytest.mark.parametrize("constrained", [False, True])
-def test_request_job_and_task_budget(spark, kind, constrained):
+def test_request_job_and_task_budget(spark, jobs_and_tasks, kind, constrained):
     """Each serving request starts at most its budgeted Spark jobs (and,
     for the full-scan searches, tasks): one job per lookup stage, and a
     search table scan in as few tasks as its files need."""
@@ -482,7 +453,7 @@ def test_request_job_and_task_budget(spark, kind, constrained):
     svc = _svc(spark, allow if constrained else None)
     request, max_jobs, max_tasks = _BUDGETS[kind]
     request(svc).collect()  # first run: code generation, file listing
-    jobs, tasks = _jobs_and_tasks(spark, lambda: request(svc).collect())
+    jobs, tasks = jobs_and_tasks(lambda: request(svc).collect())
     assert 1 <= jobs <= max_jobs, (kind, jobs, tasks)
     if max_tasks is not None:
         assert tasks <= max_tasks, (kind, jobs, tasks)

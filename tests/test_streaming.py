@@ -1570,6 +1570,47 @@ def test_corpus_index_update_py4j_budget(spark, tmp_path, py4j_calls):
     assert sorted(r["doc_id"] for r in out.collect()) == [11, 12, 13]
 
 
+def test_corpus_index_update_job_budget(spark, tmp_path, jobs_and_tasks):
+    """A warm batch holding a near-dup of a stored doc and a near-dup
+    pair within the batch starts at most 15 Spark jobs: candidates are
+    verified on the band-join rows (one signature store scan), the
+    rejects are marked and anti-joined in broadcast passes, and the
+    verdict is materialized once, by the ``accepted`` checkpoint."""
+    from visual_asset_management_system_spark.operators.corpus import (
+        corpus_index_update,
+    )
+
+    state = str(tmp_path / "state")
+    schema = "doc_id long, text string"
+    corpus_index_update(
+        spark,
+        state,
+        spark.createDataFrame(
+            [(i, _corpus_text(t)) for i, t in enumerate(["fox", "bird", "tree"])],
+            schema,
+        ),
+        batch_key="b0",
+    )
+    river = _corpus_text("river")
+    batch = spark.createDataFrame(
+        [
+            (10, " ".join(_corpus_text("fox").split()[:-2])),  # store near-dup
+            (11, river),
+            (12, river + " again"),  # near-dup of 11 within the batch
+            (13, _corpus_text("cloud")),
+        ],
+        schema,
+    )
+    out = {}
+    jobs, _ = jobs_and_tasks(
+        lambda: out.update(
+            df=corpus_index_update(spark, state, batch, batch_key="b1")
+        )
+    )
+    assert jobs <= 15, f"{jobs} Spark jobs for a warm batch"
+    assert sorted(r["doc_id"] for r in out["df"].collect()) == [11, 13]
+
+
 def test_corpus_index_update_evaluates_input_once(spark, tmp_path):
     """With both stores present, the batch's gate → fingerprint →
     first-wins window runs once over the input, not once per side of

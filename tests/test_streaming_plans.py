@@ -39,9 +39,12 @@ from visual_asset_management_system_spark.plans.audit import (
 #: exchanges/scans are CEILINGS (growth fails), min_broadcasts a FLOOR
 #: where the handler's 100 TB posture claims a broadcast batch side.
 _BASELINE = {
-    "minhash_update": {"exchanges": 4, "scans": 2, "min_broadcasts": 1},
+    # minhash/corpus: candidates are verified on the band-join rows, so
+    # the signature store is scanned once; corpus marks and anti-joins
+    # its rejects in broadcast passes, shuffling neither side
+    "minhash_update": {"exchanges": 4, "scans": 1, "min_broadcasts": 1},
     "substring_update": {"exchanges": 7, "scans": 1, "min_broadcasts": 1},
-    "corpus_update": {"exchanges": 10, "scans": 2, "min_broadcasts": 1},
+    "corpus_update": {"exchanges": 7, "scans": 1, "min_broadcasts": 1},
     "kmv_read": {"exchanges": 1, "scans": 1, "min_broadcasts": 0},
     "cms_read": {"exchanges": 2, "scans": 1, "min_broadcasts": 0},
     "bloom_read": {"exchanges": 1, "scans": 1, "min_broadcasts": 0},

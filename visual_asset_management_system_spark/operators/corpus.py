@@ -488,6 +488,26 @@ def _batch_filter_exprs(
     )
 
 
+def _near_dup_rejects(
+    pairs: DataFrame, batch: DataFrame, id_col: str
+) -> DataFrame:
+    """The losing batch ids (column ``id_col``, with repeats) of the raw
+    probe matches ``pairs`` (id_a < id_b): a batch doc loses to an
+    in-store partner on either pair side and to an earlier-id partner
+    within the batch. Every match has a batch-side doc, so the loser is
+    ``id_b`` when ``id_b`` is a batch id and ``id_a`` otherwise — one
+    broadcast membership test on ``id_b``, exact by id even where a
+    store id equals a batch id."""
+    batch_ids = batch.select(
+        F.col(id_col).alias("id_b"), F.lit(True).alias("_b_in")
+    )
+    return pairs.join(F.broadcast(batch_ids), "id_b", "left").select(
+        F.when(F.col("_b_in"), F.col("id_b"))
+        .otherwise(F.col("id_a"))
+        .alias(id_col)
+    )
+
+
 def corpus_index_update(
     spark,
     state_dir: str,
@@ -527,20 +547,28 @@ def corpus_index_update(
     by id, matching the batch pipeline's lowest-id representative
     rule). Under out-of-order arrival the stream may therefore keep a
     different cluster representative than the batch pipeline, but never
-    both members of a cluster.
+    both members of a cluster. Every probe match has a batch-side doc,
+    so the rule is one membership test: the loser is ``id_b`` when it
+    is a batch id, else ``id_a`` — a broadcast left join of the raw
+    matches on the batch ids, then a broadcast anti-join of the batch
+    against the (batch-sized) reject set.
 
     Crash safety (at-least-once replay): nothing is appended to either
     store until AFTER the optional ``commit(accepted)`` callback (the
     caller's sink write) returns, and both appends are tagged with
     ``batch_key`` which the replay's store reads exclude — so a batch
     replayed from ANY crash point recomputes the identical accepted
-    set. Re-appended store rows are benign duplicates (anti-join and
-    distinct'd-pair semantics are idempotent to them).
+    set. Re-appended store rows are benign duplicates (they only repeat
+    raw matches, and the reject anti-join is idempotent to them).
 
-    Scale shape: every store interaction is an anti-join or a banded
-    probe keyed on the batch (the small side — broadcast at a
-    batch:corpus ratio of 1:1000); state grows by one append per batch
-    and is never rewritten.
+    Scale shape: each store is scanned once per batch. The fingerprint
+    store is semi-joined against the broadcast batch fingerprints; the
+    signature store feeds the banded probe, which verifies candidates
+    on the band-join rows against the broadcast batch bands. The reject
+    marking and the accept anti-join broadcast batch-sized sides, so
+    neither store is ever shuffled. One checkpoint (``accepted``)
+    materializes the verdict ahead of ``commit`` and the appends; state
+    grows by one append per batch and is never rewritten.
     """
     import os as _os
 
@@ -599,37 +627,10 @@ def corpus_index_update(
         bands=bands,
         exclude_batch=batch_key,
     )
-    # a batch doc loses to an in-store partner on either pair side and
-    # to an earlier-id partner within the batch
-    in_batch = batch_unique.select(F.col(id_col).alias("_bid")).withColumn(
-        "_in_batch", F.lit(True)
-    )
-    marked = (
-        pairs.join(
-            in_batch.select(
-                F.col("_bid").alias("id_a"), F.col("_in_batch").alias("_a_in")
-            ),
-            "id_a",
-            "left",
-        ).join(
-            in_batch.select(
-                F.col("_bid").alias("id_b"), F.col("_in_batch").alias("_b_in")
-            ),
-            "id_b",
-            "left",
-        )
-    )
-    rejects = (
-        marked.select(
-            F.when(F.col("_b_in").isNotNull(), F.col("id_b"))  # later-id / store partner
-            .when(F.col("_a_in").isNotNull(), F.col("id_a"))   # store partner with greater id
-            .alias(id_col)
-        )
-        .filter(F.col(id_col).isNotNull())
-        .distinct()
-    )
+    # no distinct on the rejects: the anti-join ignores repeats
+    rejects = _near_dup_rejects(pairs, batch_unique, id_col)
     accepted = (
-        batch_unique.join(rejects, id_col, "left_anti")
+        batch_unique.join(F.broadcast(rejects), id_col, "left_anti")
         .drop("_fp")
         .transform(maybe_checkpoint)
     )

@@ -404,8 +404,22 @@ def minhash_dedup(
     )
     sig_a = sig.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
     sig_b = sig.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
-    # component-agreement count as one zip_with/aggregate pair over the
-    # packed arrays — O(1) codegen expressions instead of k whens
+    return (
+        cands.join(sig_a, "id_a")
+        .join(sig_b, "id_b")
+        .withColumn("jaccard", _sig_jaccard(num_hashes))
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
+    )
+
+
+@functools.cache
+def _sig_jaccard(num_hashes: int) -> Column:
+    """The signature-agreement Jaccard estimate of columns ``sig_a`` and
+    ``sig_b``: equal components / k, rounded to 6 places. The count is
+    one zip_with/aggregate pair over the packed arrays — O(1) codegen
+    expressions instead of k whens. Built once per ``num_hashes`` (py4j
+    round trips, see :func:`_minhash_aggs`)."""
     matches = F.aggregate(
         F.zip_with(
             "sig_a", "sig_b", lambda x, y: F.when(x == y, 1).otherwise(0)
@@ -413,15 +427,7 @@ def minhash_dedup(
         F.lit(0),
         lambda acc, v: acc + v,
     )
-    return (
-        cands.join(sig_a, "id_a")
-        .join(sig_b, "id_b")
-        .withColumn(
-            "jaccard", F.round(matches / F.lit(num_hashes), 6)
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    return F.round(matches / F.lit(num_hashes), 6)
 
 
 # --------------------------------------------------------------------------
@@ -447,21 +453,31 @@ def simhash_signatures(
         F.col(id_col).alias("id"),
         F.explode(tokens(F.lower(F.col(text_col)))).alias("t"),
     ).select("id", F.xxhash64("t").alias("h"))
-    bit_aggs = [
+    # built once per bits, like the MinHash aggregates
+    bit_aggs, sig = _simhash_exprs(bits)
+    return hashed.groupBy("id").agg(*bit_aggs).select("id", sig)
+
+
+@functools.cache
+def _simhash_exprs(bits: int) -> tuple[tuple[Column, ...], Column]:
+    """The ``bits`` per-bit ±1 sums over column ``h`` and the ``sig``
+    sum packing their signs into one bigint. Built once per ``bits`` for
+    the same reason as :func:`_minhash_aggs`: the expressions depend on
+    no data, and each Column call is a py4j round trip."""
+    bit_aggs = tuple(
         F.sum(
             F.when(
                 F.shiftright("h", j).bitwiseAND(F.lit(1)) == 1, 1
             ).otherwise(-1)
         ).alias(f"b{j}")
         for j in range(bits)
-    ]
-    per_bit = hashed.groupBy("id").agg(*bit_aggs)
+    )
     sig = F.lit(0).cast("bigint")
     for j in range(bits):
         sig = sig + F.when(
             F.col(f"b{j}") > 0, F.lit(1 << j).cast("bigint")
         ).otherwise(F.lit(0))
-    return per_bit.select("id", sig.alias("sig"))
+    return bit_aggs, sig.alias("sig")
 
 
 def simhash_near_duplicates(
@@ -549,11 +565,26 @@ def _minhash_probe(
     exclude_batch: str | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Probe half of :func:`minhash_index_update`: compute the new
-    docs' signatures, band-join them against the store, and return
-    ``(pairs, sig_new)`` WITHOUT mutating the store — callers that must
-    commit a downstream sink before state grows (the crash-safe
+    docs' signatures, band-join them against the store, verify each
+    candidate on the band-join row itself, and return
+    ``(matches, sig_new)`` WITHOUT mutating the store — callers that
+    must commit a downstream sink before state grows (the crash-safe
     ordering of corpus_index_update) append sig_new themselves via
     :func:`_append_signatures` afterwards.
+
+    ``matches`` holds the RAW verified matches ``(id_a < id_b,
+    jaccard ≥ threshold)``: a pair repeats once per band it shares (and
+    per duplicate store row a replayed append left), in both directions
+    for a new–new pair, and the frame is neither distinct'd nor
+    materialized. Callers that need the pair set apply ``distinct``;
+    callers that only test membership need not.
+
+    Plan shape: the store is scanned ONCE per batch. Its band view
+    carries each row's ``sig``, so the Jaccard estimate is computed on
+    the joined band rows; the batch side's signature comes from one
+    broadcast lookup of ``sig_new`` keyed on id. The broadcast band
+    side stays narrow — (id, band, band_hash) — so its size does not
+    grow with ``num_hashes``. Ids are assumed unique within a batch.
 
     ``exclude_batch``: ignore store rows previously appended under this
     batch key. This makes a replayed batch deterministic — a crash
@@ -590,8 +621,13 @@ def _minhash_probe(
         sig_all = sig_new
 
     banded_new = _banded(sig_new, bands, rows_per_band)
-    banded_all = _banded(sig_all, bands, rows_per_band)
-    cands = (
+    banded_all = sig_all.select(
+        "id", "sig", _band_explode(bands, rows_per_band)
+    ).select("id", F.col("sig").alias("sig_b"), "bh.band", "bh.band_hash")
+    sig_l = sig_new.select(
+        F.col("id").alias("_lid"), F.col("sig").alias("sig_a")
+    )
+    matches = (
         F.broadcast(banded_new)
         .alias("l")
         .join(
@@ -600,32 +636,17 @@ def _minhash_probe(
             & (F.col("l.band_hash") == F.col("r.band_hash"))
             & (F.col("l.id") != F.col("r.id")),
         )
+        .join(F.broadcast(sig_l), F.col("l.id") == F.col("_lid"))
         # normalize so a new-new pair (seen from both directions) and a
         # new-old pair key identically
         .select(
             F.least("l.id", "r.id").alias("id_a"),
             F.greatest("l.id", "r.id").alias("id_b"),
+            _sig_jaccard(num_hashes).alias("jaccard"),
         )
-        .distinct()
-    )
-    sig_a = sig_all.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
-    sig_b = sig_all.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
-    matches = F.aggregate(
-        F.zip_with(
-            "sig_a", "sig_b", lambda x, y: F.when(x == y, 1).otherwise(0)
-        ),
-        F.lit(0),
-        lambda acc, v: acc + v,
-    )
-    pairs = (
-        cands.join(sig_a, "id_a")
-        .join(sig_b, "id_b")
-        .withColumn("jaccard", F.round(matches / F.lit(num_hashes), 6))
         .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-        .transform(maybe_checkpoint)  # materialize BEFORE the store grows
     )
-    return pairs, sig_new
+    return matches, sig_new
 
 
 def _append_signatures(
@@ -633,8 +654,9 @@ def _append_signatures(
 ) -> None:
     """Blind parquet append of a batch's signatures, tagged with the
     batch key so a replay can exclude (and harmlessly re-append) its
-    own rows. Duplicate rows from a replayed append are benign: the
-    candidate join distinct's pairs and the signature estimate is
+    own rows. Duplicate rows from a replayed append are benign: they
+    only repeat a raw probe match, which every caller distinct's or
+    tests for membership, and the signature estimate is
     row-content-deterministic."""
     sig_new.withColumn(
         "batch_key", F.lit(batch_key).cast("string")
@@ -661,8 +683,11 @@ def minhash_index_update(
     Per batch: signatures are computed for the NEW docs only, banded,
     and probed against the band view of the existing store; candidate
     pairs therefore always touch ≥ 1 new doc. Verification is the same
-    signature-agreement estimate as :func:`minhash_dedup`. New
-    signatures are appended to the store afterwards.
+    signature-agreement estimate as :func:`minhash_dedup`, computed on
+    the band-join rows by :func:`_minhash_probe`. Its raw matches repeat
+    once per shared band, so this function ``distinct``s them and
+    materializes the pair set BEFORE the store grows; the new
+    signatures are appended afterwards.
 
     Invariant (tested): running batches B1..Bn emits exactly the pair
     set a from-scratch ``minhash_dedup`` computes over ∪Bi — each pair
@@ -670,10 +695,10 @@ def minhash_index_update(
 
     Scale shape: the probe joins |batch|·bands rows against the store's
     band view — with a daily-batch : corpus ratio of 1:1000 the join
-    broadcasts the new side; the store read is one column-pruned scan
-    (id, sig). Appends are blind parquet appends (no rewrite); on a
-    lakehouse runtime the store is a clustered table and this is an
-    INSERT.
+    broadcasts the new side; the store read is ONE column-pruned scan
+    (id, sig) that feeds both the band join and the verification.
+    Appends are blind parquet appends (no rewrite); on a lakehouse
+    runtime the store is a clustered table and this is an INSERT.
     """
     pairs, sig_new = _minhash_probe(
         spark,
@@ -687,6 +712,7 @@ def minhash_index_update(
         shingle_n,
         exclude_batch=batch_key,
     )
+    pairs = pairs.distinct().transform(maybe_checkpoint)
     _append_signatures(sig_new, store_dir, batch_key)
     return pairs
 
@@ -740,7 +766,7 @@ def start_minhash_dedup_stream(
             bands=bands,
             exclude_batch=key,
         )
-        pairs.write.mode("overwrite").parquet(
+        pairs.distinct().write.mode("overwrite").parquet(
             _os.path.join(pairs_dir, f"batch={key}")
         )
         _append_signatures(sig_new, store_dir, key)
