@@ -782,6 +782,46 @@ def test_simhash_signatures_py4j_budget(spark, py4j_calls):
     assert sorted(tuple(r) for r in warm.collect()) == first
 
 
+def test_sketch_probe_py4j_budget(spark, py4j_calls):
+    """A warm ``cms_probe`` and a warm ``bloom_flag`` build their
+    salted cell / bit-position expressions once per parameters: the
+    driver-side cost of a probe does not grow with the sketch depth.
+    ``bloom_flag`` also collects the bounded bit mask, whose round
+    trips vary from call to call, so its budget holds the least of
+    three warm calls."""
+    from visual_asset_management_system_spark.operators.sketches import (
+        bloom_build,
+        bloom_flag,
+        cms_build,
+        cms_probe,
+    )
+
+    keys = spark.createDataFrame([("a",), ("b",), (None,)], "key string")
+    cms = cms_build(keys, "key")
+    bloom = bloom_build(keys, "key")
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()), key=str)
+
+    want_est = rows(cms_probe(keys, cms, "key"))
+    want_flag = rows(bloom_flag(keys, bloom, "key"))
+
+    def warm_calls(probe):
+        before = py4j_calls.n
+        out = probe()
+        return py4j_calls.n - before, out
+
+    calls, est = warm_calls(lambda: cms_probe(keys, cms, "key"))
+    assert calls <= 150, f"{calls} py4j round trips for a warm cms_probe"
+    assert rows(est) == want_est
+    runs = [
+        warm_calls(lambda: bloom_flag(keys, bloom, "key")) for _ in range(3)
+    ]
+    calls = min(n for n, _ in runs)
+    assert calls <= 200, f"{calls} py4j round trips for a warm bloom_flag"
+    assert all(rows(flag) == want_flag for _, flag in runs)
+
+
 def test_simhash_bucket_cap_drops_duplicate_floods(spark):
     docs = tables(spark, SF)["documents"].select("doc_id", "text").limit(20)
     flood = spark.createDataFrame(

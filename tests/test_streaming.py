@@ -1309,7 +1309,7 @@ def test_compact_gram_store_preserves_decisions(spark, tmp_path):
     n_rows = compact_gram_store(spark, state, exclude_tags=("b1",))
     assert n_rows > 0
     store = spark.read.parquet(str(tmp_path / "cstate" / "grams"))
-    tags = {r["batch_tag"] for r in store.select("batch_tag").distinct().collect()}
+    tags = {r["batch_key"] for r in store.select("batch_key").distinct().collect()}
     assert "b1" in tags and "b0" not in tags
 
     # replay of the excluded batch still collapses (no double count)...
@@ -1338,8 +1338,6 @@ def test_compact_gram_store_crash_window_recovers(spark, tmp_path):
     read/rewrite must RESTORE the aside — not silently treat history as
     empty (which would emit un-deduplicated rows and then recreate the
     dir, hiding the loss forever)."""
-    import shutil
-
     from visual_asset_management_system_spark.operators.corpus import (
         compact_gram_store,
         substring_index_update,
@@ -1374,12 +1372,28 @@ def test_compact_gram_store_crash_window_recovers(spark, tmp_path):
     assert got == {2: ("c d", L)}
     assert os.path.isdir(gram_dir) and not os.path.isdir(gram_dir + ".old")
 
+    def totals():
+        return {
+            r["k"]: r["c"]
+            for r in spark.read.parquet(gram_dir)
+            .groupBy("k")
+            .agg(F.sum("c").alias("c"))
+            .collect()
+        }
+
+    want = totals()
     # compact_gram_store itself also recovers before compacting
     os.replace(gram_dir, gram_dir + ".old")
+    # ...and ignores a stale grams.compact-tmp (junk counts) left by a
+    # crash after an earlier compaction's tmp write, leaving no tmp dir
+    stale = gram_dir + ".compact-tmp"
+    spark.createDataFrame(
+        [(1, 10**6, "junk")], "k long, c long, batch_key string"
+    ).write.parquet(stale)
     n = compact_gram_store(spark, state)
     assert n > 0 and os.path.isdir(gram_dir)
-    # ...and a stale .compact_tmp from the same crash is swept
-    shutil.rmtree(gram_dir + ".compact_tmp", ignore_errors=True)
+    assert totals() == want
+    assert not os.path.exists(stale)
 
 
 def test_substring_dedup_stream_matches_prefix_and_replays(spark, tmp_path):

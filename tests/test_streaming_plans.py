@@ -486,3 +486,56 @@ def test_stream_and_swap_protocols_live_in_the_driver_module():
                 offenders.append(f"{rel}:{line}: os.replace onto a .old path")
     assert not offenders, "\n".join(offenders)
     assert os.path.isfile(os.path.join(root, _DRIVER_MODULE))
+
+
+#: the one module that owns the maintained-store protocol (tagged
+#: append, replay-excluding read, compaction and rewrite)
+_STORE_MODULE = os.path.join("operators", "store.py")
+
+
+def _store_protocol_offences(tree) -> list[str]:
+    """What a module does that only the store protocol may: call
+    ``swap_dir``, name a rewrite's tmp directory, or put the
+    ``batch_key`` tag column on a frame (``withColumn``/``alias``)."""
+    hits = []
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Constant) and isinstance(n.value, str):
+            for tmp in (".compact-tmp", ".compact_tmp", ".merge-tmp"):
+                if tmp in n.value:
+                    hits.append(f"{n.lineno}: {tmp} literal")
+        if not isinstance(n, ast.Call):
+            continue
+        name = getattr(n.func, "attr", getattr(n.func, "id", None))
+        if name == "swap_dir":
+            hits.append(f"{n.lineno}: calls swap_dir")
+        if (
+            name in ("withColumn", "alias")
+            and n.args
+            and isinstance(n.args[0], ast.Constant)
+            and n.args[0].value == "batch_key"
+        ):
+            hits.append(f"{n.lineno}: tags a frame with batch_key")
+    return hits
+
+
+def test_store_protocol_lives_in_the_store_module():
+    """Every batch-keyed store appends, reads, compacts and rewrites
+    through operators/store.py: no other package module may promote a
+    rewrite with swap_dir, name its tmp directory, or tag rows with
+    ``batch_key`` itself. A store that hand-rolls its own append or
+    compaction fails here."""
+    import visual_asset_management_system_spark as pkg
+
+    root = os.path.dirname(pkg.__file__)
+    offenders = []
+    for dirpath, _dirs, files in os.walk(root):
+        for f in sorted(files):
+            path = os.path.join(dirpath, f)
+            rel = os.path.relpath(path, root)
+            if not f.endswith(".py") or rel == _STORE_MODULE:
+                continue
+            with open(path) as fh:
+                tree = ast.parse(fh.read())
+            offenders += [f"{rel}:{h}" for h in _store_protocol_offences(tree)]
+    assert not offenders, "\n".join(offenders)
+    assert os.path.isfile(os.path.join(root, _STORE_MODULE))

@@ -32,7 +32,8 @@ import functools
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..streaming.driver import recover_dir, run_micro_batches, swap_dir
+from . import store
+from ..streaming.driver import run_micro_batches
 from .checkpointing import maybe_checkpoint
 from .text import token_count
 
@@ -555,11 +556,11 @@ def corpus_index_update(
 
     Crash safety (at-least-once replay): nothing is appended to either
     store until AFTER the optional ``commit(accepted)`` callback (the
-    caller's sink write) returns, and both appends are tagged with
-    ``batch_key`` which the replay's store reads exclude — so a batch
-    replayed from ANY crash point recomputes the identical accepted
-    set. Re-appended store rows are benign duplicates (they only repeat
-    raw matches, and the reject anti-join is idempotent to them).
+    caller's sink write) returns, and the store reads exclude the
+    batch's own rows (operators/store.py) — so a batch replayed from ANY
+    crash point recomputes the identical accepted set. Re-appended
+    store rows are benign duplicates (they only repeat raw matches, and
+    the reject anti-join is idempotent to them).
 
     Scale shape: each store is scanned once per batch. The fingerprint
     store is semi-joined against the broadcast batch fingerprints; the
@@ -590,20 +591,10 @@ def corpus_index_update(
     batch_unique = maybe_checkpoint(
         drop_exact_duplicates(filtered, id_col=id_col, fp_col="_fp")
     )
-    # ...then against the maintained fingerprint set (replay-tolerant:
-    # rows this same batch appended before a crash are excluded).
-    # Explicit schema: files that predate the batch_key column read it
-    # as NULL, and no per-batch schema-merge job reads every footer.
-    have_fp = _os.path.isdir(fp_dir) and any(
-        f.endswith(".parquet") for f in _os.listdir(fp_dir)
-    )
-    if have_fp:
-        seen = spark.read.schema(_FP_STORE_SCHEMA).parquet(fp_dir)
-        if batch_key is not None:
-            seen = seen.filter(
-                F.col("batch_key").isNull()
-                | (F.col("batch_key") != batch_key)
-            )
+    # ...then against the maintained fingerprint set. Explicit schema:
+    # no per-batch schema-merge job reads every footer.
+    seen = store.read(spark, fp_dir, batch_key, schema=_FP_STORE_SCHEMA)
+    if seen is not None:
         # LeftAnti can only broadcast its build (store) side, so a
         # direct batch-anti-store join would shuffle the WHOLE store
         # every micro-batch. Instead semi-join the store against the
@@ -640,9 +631,7 @@ def corpus_index_update(
     if commit is not None:
         commit(accepted)
     _append_signatures(sig_new, sig_dir, batch_key)
-    batch_unique.select("_fp").withColumn(
-        "batch_key", F.lit(batch_key).cast("string")
-    ).write.mode("append").parquet(fp_dir)
+    store.append(batch_unique.select("_fp"), fp_dir, batch_key)
     return accepted
 
 
@@ -664,10 +653,10 @@ def start_corpus_build_stream(
 
     Effectively-once: each micro-batch writes its accepted rows into
     its own ``batch=<id>`` partition with overwrite semantics BEFORE
-    any state append (corpus_index_update's commit callback), and state
-    appends are batch-key-tagged so a replay recomputes the identical
-    accepted set — a replayed batch overwrites its partition with the
-    same rows instead of duplicating or dropping them."""
+    any state append (corpus_index_update's commit callback), so a
+    replayed batch recomputes the identical accepted set and
+    overwrites its partition with the same rows instead of duplicating
+    or dropping them."""
     import os as _os
 
     stream = (
@@ -702,6 +691,16 @@ def start_corpus_build_stream(
 # incremental (streaming) substring deduplication
 # --------------------------------------------------------------------------
 
+def _gram_dir(state_dir: str) -> str:
+    import os as _os
+
+    return _os.path.join(state_dir, "grams")
+
+
+def _gram_merge(rows: DataFrame) -> DataFrame:
+    return store.additive_merge(rows, ["k"], "c")
+
+
 def substring_index_update(
     spark,
     state_dir: str,
@@ -729,19 +728,16 @@ def substring_index_update(
     representatives); the future batch's own occurrences ARE cut, since
     by then the store carries the earlier instances.
 
-    State under ``state_dir``: ``grams/`` — append-only parquet of
-    ``(k bigint, c bigint, batch_tag string)`` per-batch gram-hash
-    counts. Readers aggregate ``max(c)`` per (k, batch_tag) before
-    summing across tags, so a replayed append (identical deterministic
-    counts under the same ``batch_key``) collapses instead of
-    double-counting — COUNT state needs this where the membership/pair
-    stores tolerate raw duplicates. Callers without a stable
+    State under ``state_dir``: ``grams/`` — append-only
+    ``(k bigint, c bigint, batch_key string)`` per-batch gram-hash
+    counts, read through ``store.additive_merge`` so a replayed append
+    collapses instead of double-counting. Callers without a stable
     ``batch_key`` get a fresh uuid tag per append (exactly-once only if
     they call exactly once).
 
     Crash safety (at-least-once replay): nothing is appended until
     AFTER the optional ``commit(result)`` callback returns, and the
-    store read excludes rows tagged with the CURRENT ``batch_key`` — a
+    store read excludes the batch's own rows (operators/store.py) — a
     batch replayed from any crash point recomputes the identical
     rewritten rows.
 
@@ -750,14 +746,11 @@ def substring_index_update(
     BROADCAST batch key set (one store scan, no store shuffle — the
     probe result is batch-bounded); the append is the batch's
     map-combined per-gram counts. The store grows by one small file set
-    per batch and is never rewritten; a maintenance job may compact it
-    by pre-aggregating (k, batch_tag) → one row without changing reader
-    results."""
-    import os as _os
+    per batch until :func:`compact_gram_store` folds it to one row per
+    gram without changing reader results."""
     import uuid as _uuid
 
-    gram_dir = _os.path.join(state_dir, "grams")
-    recover_dir(gram_dir)
+    gram_dir = _gram_dir(state_dir)
     tag = batch_key if batch_key is not None else _uuid.uuid4().hex
 
     base = new_docs.select(
@@ -768,33 +761,14 @@ def substring_index_update(
     batch_counts = maybe_checkpoint(batch_counts)
 
     total = batch_counts
-    have_store = _os.path.isdir(gram_dir) and any(
-        f.endswith(".parquet") for f in _os.listdir(gram_dir)
-    )
-    if have_store:
-        store = spark.read.parquet(gram_dir)
-        if batch_key is not None:
-            # a crashed prior attempt of THIS batch may have appended
-            store = store.filter(F.col("batch_tag") != batch_key)
-        hits = store.join(
+    stored = store.read(spark, gram_dir, batch_key)
+    if stored is not None:
+        hits = stored.join(
             F.broadcast(batch_counts.select("k")), "k", "left_semi"
         )
-        store_counts = (
-            # collapse replayed duplicate appends: identical (k, tag)
-            # rows carry identical deterministic counts
-            hits.groupBy("k", "batch_tag")
-            .agg(F.max("c").alias("_c1"))
-            .groupBy("k")
-            .agg(F.sum("_c1").alias("_sc"))
-        )
-        total = (
-            batch_counts.join(store_counts, "k", "left")
-            .select(
-                "k",
-                (
-                    F.col("_bc") + F.coalesce(F.col("_sc"), F.lit(0))
-                ).alias("_bc"),
-            )
+        total = batch_counts.join(_gram_merge(hits), "k", "left").select(
+            "k",
+            (F.col("_bc") + F.coalesce(F.col("c"), F.lit(0))).alias("_bc"),
         )
     dup_keys = total.filter(F.col("_bc") >= min_count).select("k")
     result = _substring_rewrite(
@@ -805,11 +779,11 @@ def substring_index_update(
     # (tag-excluded) store view and reproduces the same rewritten rows
     if commit is not None:
         commit(result)
-    batch_counts.select(
-        "k",
-        F.col("_bc").cast("bigint").alias("c"),
-        F.lit(tag).alias("batch_tag"),
-    ).write.mode("append").parquet(gram_dir)
+    store.append(
+        batch_counts.select("k", F.col("_bc").cast("bigint").alias("c")),
+        gram_dir,
+        tag,
+    )
     return result
 
 
@@ -863,53 +837,14 @@ def compact_gram_store(
     state_dir: str,
     exclude_tags: tuple[str, ...] = (),
 ) -> int:
-    """Compact the substring-dedup gram store: pre-aggregate the
-    per-batch (k, c, batch_tag) rows into one row per gram under a
-    fresh synthetic tag, so reader-side work stops growing with batch
-    count (the OPTIMIZE analog of cdc.compact_sink for COUNT state).
-
-    Replay safety: collapsing a batch's rows into the compacted total
-    discards its tag, so a LATER at-least-once replay of that same
-    batch would re-append counts that no longer dedupe — pass the tags
-    of any batch that may still replay in ``exclude_tags`` (under the
-    streaming wrapper that is only the most recent micro-batch: the
-    checkpoint commits earlier ones). Excluded tags are carried through
-    verbatim. Maintenance job, single writer (same assumption as every
-    store rewrite here).
-
-    Crash safety: the two-rename swap of streaming/driver.py
-    (``swap_dir``); a crash between the renames leaves the counts
-    complete in ``grams.old``, and ``recover_dir`` (run at the start
-    of every read/rewrite, this function included) restores it before
-    anything observes an empty store. On an object store run the swap
-    as the manifest-commit pattern instead. Returns the store's row
-    count after compaction."""
-    import os as _os
-    import shutil as _shutil
-    import uuid as _uuid
-
-    gram_dir = _os.path.join(state_dir, "grams")
-    recover_dir(gram_dir)
-    if not _os.path.isdir(gram_dir):
-        return 0
-    store = spark.read.parquet(gram_dir)
-    keep = store.filter(F.col("batch_tag").isin(list(exclude_tags)))
-    old = store.filter(~F.col("batch_tag").isin(list(exclude_tags)))
-    compacted = (
-        # same dedup-then-sum the readers apply, frozen into one row
-        old.groupBy("k", "batch_tag")
-        .agg(F.max("c").alias("_c1"))
-        .groupBy("k")
-        .agg(F.sum("_c1").cast("bigint").alias("c"))
-        .withColumn(
-            "batch_tag", F.lit(f"_compacted-{_uuid.uuid4().hex[:12]}")
-        )
-        .select("k", "c", "batch_tag")
+    """Compact the substring-dedup gram store: fold the per-batch
+    (k, c) rows into one row per gram, so reader-side work stops
+    growing with batch count (the OPTIMIZE analog of cdc.compact_sink
+    for COUNT state). Pass the tags of any batch that may still replay
+    in ``exclude_tags`` (under the streaming wrapper that is only the
+    most recent micro-batch: the checkpoint commits earlier ones); they
+    are carried through verbatim. Returns the store's row count after
+    compaction."""
+    return store.compact(
+        spark, _gram_dir(state_dir), _gram_merge, keep_tags=exclude_tags
     )
-    out = compacted.unionByName(keep.select("k", "c", "batch_tag"))
-    tmp = gram_dir + ".compact_tmp"
-    _shutil.rmtree(tmp, ignore_errors=True)
-    out.write.mode("overwrite").parquet(tmp)
-    n = spark.read.parquet(tmp).count()
-    swap_dir(tmp, gram_dir)
-    return n

@@ -26,6 +26,7 @@ import functools
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from . import store
 from ..streaming.driver import run_micro_batches
 from .checkpointing import maybe_checkpoint
 
@@ -587,38 +588,26 @@ def _minhash_probe(
     grow with ``num_hashes``. Ids are assumed unique within a batch.
 
     ``exclude_batch``: ignore store rows previously appended under this
-    batch key. This makes a replayed batch deterministic — a crash
-    after the store append but before the caller's sink commit would
-    otherwise make the replay see its own half-applied writes and
-    compute an empty result.
+    batch key, so a replayed batch sees the store as its first attempt
+    did (operators/store.py).
     """
-    import os as _os
-
     sig_new = minhash_signatures(
         new_docs, text_col, id_col, num_hashes, shingle_n
     ).transform(maybe_checkpoint)
     rows_per_band = num_hashes // bands
 
-    have_store = _os.path.isdir(store_dir) and any(
-        f.endswith(".parquet") for f in _os.listdir(store_dir)
+    # explicit schema (ids typed like the batch's): no per-batch
+    # schema-merge job reads every footer of the store
+    id_type = sig_new.schema["id"].dataType.simpleString()
+    stored = store.read(
+        spark,
+        store_dir,
+        exclude_batch,
+        schema=f"id {id_type}, sig array<bigint>, {store.TAG} string",
     )
-    if have_store:
-        # explicit schema (ids typed like the batch's), no footer
-        # inference: files that predate the batch_key column read it as
-        # NULL (never excluded), and no per-batch schema-merge job reads
-        # every footer of the store
-        id_type = sig_new.schema["id"].dataType.simpleString()
-        stored = spark.read.schema(
-            f"id {id_type}, sig array<bigint>, batch_key string"
-        ).parquet(store_dir)
-        if exclude_batch is not None:
-            stored = stored.filter(
-                F.col("batch_key").isNull()
-                | (F.col("batch_key") != exclude_batch)
-            )
+    sig_all = sig_new
+    if stored is not None:
         sig_all = stored.select("id", "sig").unionByName(sig_new)
-    else:
-        sig_all = sig_new
 
     banded_new = _banded(sig_new, bands, rows_per_band)
     banded_all = sig_all.select(
@@ -652,15 +641,11 @@ def _minhash_probe(
 def _append_signatures(
     sig_new: DataFrame, store_dir: str, batch_key: str | None = None
 ) -> None:
-    """Blind parquet append of a batch's signatures, tagged with the
-    batch key so a replay can exclude (and harmlessly re-append) its
-    own rows. Duplicate rows from a replayed append are benign: they
-    only repeat a raw probe match, which every caller distinct's or
-    tests for membership, and the signature estimate is
-    row-content-deterministic."""
-    sig_new.withColumn(
-        "batch_key", F.lit(batch_key).cast("string")
-    ).write.mode("append").parquet(store_dir)
+    """Blind tagged append of a batch's signatures. Duplicate rows from
+    a replayed append are benign: they only repeat a raw probe match,
+    which every caller distinct's or tests for membership, and the
+    signature estimate is row-content-deterministic."""
+    store.append(sig_new, store_dir, batch_key)
 
 
 def minhash_index_update(
@@ -737,11 +722,10 @@ def start_minhash_dedup_stream(
     CDC (streaming/cdc.py start_search_table_stream): the same
     incremental operator serves the batch backfill and the stream, and
     the pair log is a parquet audit trail. Effectively-once: the pair
-    sink is written BEFORE the signature append, the append is tagged
-    with the batch key, and a replay excludes its own half-applied
-    store rows — so it recomputes the identical pair set and overwrites
-    its own partition instead of duplicating or dropping pairs (the
-    same crash-ordering discipline as corpus_index_update).
+    sink is written BEFORE the signature append, so a replay recomputes
+    the identical pair set and overwrites its own partition instead of
+    duplicating or dropping pairs (the crash ordering of
+    corpus_index_update).
 
     Layout note: the pair log is partition-per-batch (``batch=<id>``
     subdirectories). A pairs_dir holding FLAT part files from the

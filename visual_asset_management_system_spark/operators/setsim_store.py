@@ -41,13 +41,11 @@ Store layout (``store_dir``):
   distinct-item array, for exact verification of candidate pairs.
 
 Both relations are per-document IDEMPOTENT state (a replayed append
-rewrites byte-identical rows), so the replay discipline is the cheap
-one — readers dedup with distinct/dropDuplicates and compaction needs
-no tag exclusion (the KMV-store class, not the additive CMS/gram-count
-class). Crash safety for the pair sink follows the minhash stream:
-pairs land in an overwritten ``batch=<key>`` partition BEFORE the
-store appends, and a replay excludes its own half-applied rows via the
-batch tag, so it recomputes the identical pair set.
+rewrites byte-identical rows): readers dedup with
+distinct/dropDuplicates and compaction needs no ``keep_tags`` (append,
+replay-excluding read and compaction are operators/store.py's). The
+pair sink is written BEFORE the store appends, so a replay recomputes
+the identical pair set.
 
 Scale shape per batch: prefix computation is batch-sized (one per-doc
 window); the probe is one token equi-join of |batch| prefixes against
@@ -66,15 +64,14 @@ applied to the similarity-join index, per the LLM-pipeline mandate.
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
 from fractions import Fraction
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..streaming.driver import recover_dir, run_micro_batches, swap_dir
+from . import store
+from ..streaming.driver import run_micro_batches
 from .checkpointing import maybe_checkpoint
 from .sampling import sample_hash
 from .text import tokens
@@ -149,24 +146,6 @@ def _batch_relations(
     return prefix, arrays
 
 
-def _read_store(
-    spark: SparkSession, d: str, exclude_batch: str | None
-) -> DataFrame | None:
-    """One store sub-relation, replay-safe: rows from a half-applied
-    append of the CURRENT batch (same tag) are excluded so a replayed
-    probe sees the store exactly as the first attempt did. None when
-    the store doesn't exist yet."""
-    recover_dir(d)
-    if not os.path.isdir(d):
-        return None
-    df = spark.read.parquet(d)
-    if exclude_batch is not None:
-        df = df.filter(
-            ~F.col("batch_key").eqNullSafe(F.lit(exclude_batch))
-        )
-    return df.drop("batch_key")
-
-
 def _setsim_probe(
     spark: SparkSession,
     store_dir: str,
@@ -187,16 +166,20 @@ def _setsim_probe(
     prefix_new = maybe_checkpoint(prefix_new)
     arrays_new = maybe_checkpoint(arrays_new)
 
-    stored_prefix = _read_store(spark, _prefix_dir(store_dir), exclude_batch)
-    stored_arrays = _read_store(spark, _arrays_dir(store_dir), exclude_batch)
+    # each relation is read alone: a crash between the two appends
+    # leaves prefix rows without their arrays rows
+    stored_prefix = store.read(spark, _prefix_dir(store_dir), exclude_batch)
+    stored_arrays = store.read(spark, _arrays_dir(store_dir), exclude_batch)
+    all_prefix = prefix_new
     if stored_prefix is not None:
-        all_prefix = stored_prefix.unionByName(prefix_new)
-        all_arrays = stored_arrays.unionByName(arrays_new).dropDuplicates(
-            ["id"]
+        all_prefix = stored_prefix.drop(store.TAG).unionByName(prefix_new)
+    all_arrays = arrays_new
+    if stored_arrays is not None:
+        all_arrays = (
+            stored_arrays.drop(store.TAG)
+            .unionByName(arrays_new)
+            .dropDuplicates(["id"])
         )
-    else:
-        all_prefix = prefix_new
-        all_arrays = arrays_new
 
     # PPJoin positional filter, mirrored from the batch form (see
     # dedup._setsim_stage for the bound's derivation): ub(t) =
@@ -275,12 +258,6 @@ def _setsim_probe(
     return pairs, prefix_new, arrays_new
 
 
-def _append(df: DataFrame, d: str, batch_key: str | None) -> None:
-    df.withColumn(
-        "batch_key", F.lit(batch_key).cast("string")
-    ).write.mode("append").parquet(d)
-
-
 def setsim_index_update(
     spark: SparkSession,
     store_dir: str,
@@ -321,40 +298,28 @@ def setsim_index_update(
         items_col,
         exclude_batch=batch_key,
     )
-    _append(prefix_new, _prefix_dir(store_dir), batch_key)
-    _append(arrays_new, _arrays_dir(store_dir), batch_key)
+    store.append(prefix_new, _prefix_dir(store_dir), batch_key)
+    store.append(arrays_new, _arrays_dir(store_dir), batch_key)
     return pairs
 
 
 def compact_setsim_store(spark: SparkSession, store_dir: str) -> int:
     """Rewrite both sub-relations deduped (one row per (id, tok) /
-    per id) under a synthetic tag — per-doc rows are idempotent state,
-    so unlike the gram/CMS stores no replay tag needs excluding: a
-    replayed append after compaction re-adds rows the readers' dedup
-    absorbs. Two-rename swap per sub-relation (streaming/driver.py
-    swap_dir, recover_dir healing the crash window); single-writer
-    maintenance job. Returns the total post-compaction row count."""
-    total = 0
-    tag = "compacted-" + uuid.uuid4().hex[:8]
-    for d, dedup_cols in (
-        (_prefix_dir(store_dir), ["id", "tok"]),
-        (_arrays_dir(store_dir), ["id"]),
-    ):
-        recover_dir(d)
-        if not os.path.isdir(d):
-            continue
-        compacted = (
-            spark.read.parquet(d)
-            .drop("batch_key")
-            .dropDuplicates(dedup_cols)
-            .withColumn("batch_key", F.lit(tag))
+    per id) — per-doc rows are idempotent state, so unlike the
+    gram/CMS stores no replay tag needs keeping: a replayed append
+    after compaction re-adds rows the readers' dedup absorbs. Returns
+    the total post-compaction row count."""
+    return sum(
+        store.compact(
+            spark,
+            d,
+            lambda rows, cols=cols: rows.drop(store.TAG).dropDuplicates(cols),
         )
-        tmp = d + ".compact-tmp"
-        shutil.rmtree(tmp, ignore_errors=True)
-        compacted.write.mode("overwrite").parquet(tmp)
-        total += spark.read.parquet(tmp).count()
-        swap_dir(tmp, d)
-    return total
+        for d, cols in (
+            (_prefix_dir(store_dir), ["id", "tok"]),
+            (_arrays_dir(store_dir), ["id"]),
+        )
+    )
 
 
 def start_setsim_dedup_stream(
@@ -372,11 +337,9 @@ def start_setsim_dedup_stream(
     """Structured Streaming wrapper: a file-source document stream
     feeds the maintained index; each micro-batch's new qualifying pairs
     land in a ``batch=<id>`` partition of ``pairs_dir``. Effectively
-    once, by the minhash-stream crash ordering: the pair sink is
-    written (overwrite, per-batch partition) BEFORE the store appends,
-    the appends carry the batch tag, and a replayed batch excludes its
-    own half-applied rows — so it recomputes the identical pair set and
-    overwrites its own partition."""
+    once: the pair sink is written (overwrite, per-batch partition)
+    BEFORE the store appends, so a replayed batch recomputes the
+    identical pair set and overwrites its own partition."""
 
     stream = (
         spark.readStream.schema(docs_schema).format("json").load(docs_dir)
@@ -397,7 +360,7 @@ def start_setsim_dedup_stream(
         pairs.write.mode("overwrite").parquet(
             os.path.join(pairs_dir, f"batch={key}")
         )
-        _append(prefix_new, _prefix_dir(store_dir), key)
-        _append(arrays_new, _arrays_dir(store_dir), key)
+        store.append(prefix_new, _prefix_dir(store_dir), key)
+        store.append(arrays_new, _arrays_dir(store_dir), key)
 
     return run_micro_batches(stream, checkpoint_dir, step)

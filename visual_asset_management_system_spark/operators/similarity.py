@@ -25,7 +25,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..streaming.driver import recover_dir, run_micro_batches, swap_dir
+from . import store
+from ..streaming.driver import recover_dir, run_micro_batches
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -523,11 +524,10 @@ def semdedup(
 #   byte-identical vectors under a higher seq (same winner — replays
 #   are free), and a genuine re-embedding of an existing id wins
 #   deterministically (the CDC upsert semantics, without a rewrite);
-# - compaction keeps each id's winning row and rewrites with the
-#   shared two-rename crash-window swap. Re-TRAINING centroids is a
-#   rebuild (new store), exactly as re-sharding a FAISS IVF is — the
-#   sidecar's params are index format, validated at every seam (the
-#   Bloom m-mismatch class).
+# - compaction keeps each id's winning row (store.rewrite).
+#   Re-TRAINING centroids is a rebuild (new store), exactly as
+#   re-sharding a FAISS IVF is — the sidecar's params are index format,
+#   validated at every seam (the Bloom m-mismatch class).
 #
 # Probe-side equivalence is differentially testable: with the same
 # centroids, ann_store_topk over any batch split + replays equals
@@ -759,7 +759,6 @@ def ann_index_update(
         .withColumn("_list", _nearest_list(F.col(vec_col), cents))
         .withColumn("_seq", F.lit(int(meta["seq"])))
         .withColumn("_rh", F.xxhash64(F.col(vec_col)))
-        .withColumn("batch_key", F.lit(batch_key).cast("string"))
         # co-locate each list before the partitioned write (one file
         # per touched list directory, not shuffle-partitions × lists),
         # and sort by id WITHIN each list: parquet's page-level column
@@ -772,7 +771,7 @@ def ann_index_update(
         .repartition("_list")
         .sortWithinPartitions("_list", id_col)
     )
-    assigned.write.mode("append").partitionBy("_list").parquet(vecs)
+    store.append(assigned, vecs, batch_key, partition_col="_list")
     _merge_ann_keys(spark, store_dir, meta, id_col)
     _merge_ann_q8(spark, store_dir, meta, id_col, vec_col, batch=assigned)
 
@@ -804,19 +803,6 @@ def _ann_set_keys_seq(store_dir: str, keys_seq: int) -> None:
     _ann_set_meta_field(store_dir, "keys_seq", keys_seq)
 
 
-def _has_parquet_files(path: str) -> bool:
-    """True when the dataset directory holds at least one parquet data
-    file (an empty partitioned write leaves only _SUCCESS markers, and
-    ``spark.read.parquet`` on such a directory raises
-    unable-to-infer-schema)."""
-    import os
-
-    for root, _dirs, files in os.walk(path):
-        if any(f.endswith(".parquet") for f in files):
-            return True
-    return False
-
-
 def _ann_empty_vectors(spark, meta: dict, id_col: str, vec_col: str):
     """Typed EMPTY vectors relation for a created-but-unbackfilled
     store (centroids seeded, zero part files): the append schema from
@@ -836,11 +822,23 @@ def _ann_empty_vectors(spark, meta: dict, id_col: str, vec_col: str):
     )
 
 
+def _ann_vectors(
+    spark, store_dir: str, meta: dict, id_col: str, vec_col: str
+) -> DataFrame:
+    """The vectors relation, or — for a created-but-unbackfilled store
+    — its empty typed twin, so a probe returns 0 rows instead of
+    failing schema inference."""
+    rows = store.read(spark, _ann_dirs(store_dir))
+    if rows is None:
+        return _ann_empty_vectors(spark, meta, id_col, vec_col)
+    return rows
+
+
 def _merge_ann_keys(spark, store_dir, meta: dict, id_col: str) -> None:
     """Maintain the BOUNDED live-key relation: one row per live id —
     (id, _seq, _rh, _list), the store's global winners — merged per
     batch exactly like the search-table CDC artifacts (read current,
-    union the thin delta, keep winners, two-rename swap). This is what
+    union the thin delta, keep winners, ``store.rewrite``). This is what
     keeps probes O(live ids) instead of O(ever-appended rows): without
     it every probe re-derived winners from the store-wide thin
     projection between compactions (the r11 shape).
@@ -853,7 +851,6 @@ def _merge_ann_keys(spark, store_dir, meta: dict, id_col: str) -> None:
     Keys are partitioned by ``_list`` so probes prune their key scan
     to the probed lists, same as the vector fetch."""
     import os
-    import shutil
 
     kdir = _ann_keys_dir(store_dir)
     recover_dir(kdir)
@@ -861,7 +858,7 @@ def _merge_ann_keys(spark, store_dir, meta: dict, id_col: str) -> None:
     seq = int(meta["seq"])
     if keys_seq >= seq and os.path.isdir(kdir):
         return
-    if not _has_parquet_files(_ann_dirs(store_dir)):
+    if not store.has_data(_ann_dirs(store_dir)):
         # a brand-new store seeded with explicit centroids and an
         # empty (or all-NULL) first batch wrote zero part-files —
         # there is nothing to merge, and reading the fileless dataset
@@ -880,10 +877,7 @@ def _merge_ann_keys(spark, store_dir, meta: dict, id_col: str) -> None:
             .unionByName(delta.filter(F.col("_seq") > keys_seq))
         )
     merged = _ann_winners(delta, id_col).repartition("_list")
-    tmp = kdir + ".merge-tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
-    merged.write.mode("overwrite").partitionBy("_list").parquet(tmp)
-    swap_dir(tmp, kdir)
+    store.rewrite(spark, merged, kdir, partition_col="_list")
     _ann_set_keys_seq(store_dir, seq)
 
 
@@ -936,17 +930,17 @@ def _merge_ann_q8(
     seq = int(meta["seq"])
     if q8_seq >= seq:
         return
-    if not _has_parquet_files(_ann_dirs(store_dir)):
+    if not store.has_data(_ann_dirs(store_dir)):
         # create-then-backfill: zero part files, nothing to quantize
         return
     qdir = _ann_q8_dir(store_dir)
     recover_dir(qdir)
     keep = ("_list", "_seq", "_rh")
-    if batch is not None and q8_seq == seq - 1 and _has_parquet_files(qdir):
+    if batch is not None and q8_seq == seq - 1 and store.has_data(qdir):
         delta = batch
     else:
         delta = spark.read.parquet(_ann_dirs(store_dir))
-        if _has_parquet_files(qdir):
+        if store.has_data(qdir):
             delta = delta.filter(F.col("_seq") > q8_seq)
         # else: first sidecar build over a pre-sidecar store — take the
         # FULL projection (the _merge_ann_keys discipline: legacy
@@ -977,7 +971,7 @@ def _ann_q8_relation(
     qdir = _ann_q8_dir(store_dir)
     recover_dir(qdir)
     q8_seq = int(meta.get("q8_seq", 0))
-    have = _has_parquet_files(qdir)
+    have = store.has_data(qdir)
     base = (
         spark.read.parquet(qdir)
         if have
@@ -987,7 +981,7 @@ def _ann_q8_relation(
         return base
     vecs = _ann_dirs(store_dir)
     recover_dir(vecs)
-    if not _has_parquet_files(vecs):
+    if not store.has_data(vecs):
         return base
     keep = ("_list", "_seq", "_rh")
     vname = meta.get("vec_name", "embedding")
@@ -1023,7 +1017,7 @@ def _ann_live_keys(
     thin_cols = [id_col, "_seq", "_rh", "_list"]
     vecs = _ann_dirs(store_dir)
     recover_dir(vecs)
-    if not _has_parquet_files(vecs):
+    if not store.has_data(vecs):
         # created-but-unbackfilled store: no rows ⇒ no live keys
         # (keys/ cannot exist yet — its merge no-ops on the same guard)
         return _ann_empty_vectors(
@@ -1068,15 +1062,10 @@ def ann_store_read(
     replays are free. Reader-side work grows with appended batches
     until :func:`compact_ann_store` re-bounds it."""
     meta = _ann_meta(store_dir, "read")
-    vecs = _ann_dirs(store_dir)
-    recover_dir(vecs)
-    if not _has_parquet_files(vecs):
-        rows = _ann_empty_vectors(
-            spark, meta, id_col, meta.get("vec_name", "embedding")
-        )
-    else:
-        rows = spark.read.parquet(vecs)
-    return _ann_winners(rows, id_col).drop("_seq", "_rh", "batch_key")
+    rows = _ann_vectors(
+        spark, store_dir, meta, id_col, meta.get("vec_name", "embedding")
+    )
+    return _ann_winners(rows, id_col).drop("_seq", "_rh", store.TAG)
 
 
 def ann_store_topk(
@@ -1122,14 +1111,7 @@ def ann_store_topk(
     # near-tied centroids — see _sqdist_fold
     d2 = _sqdist_fold(cents, [float(x) for x in q])
     probe = [int(i) for i in np.argsort(d2, kind="stable")[:nprobe]]
-    vecs = _ann_dirs(store_dir)
-    recover_dir(vecs)
-    if _has_parquet_files(vecs):
-        rows = spark.read.parquet(vecs)
-    else:
-        # created-but-unbackfilled store: probe an empty typed relation
-        # (0-row result) instead of unable-to-infer-schema
-        rows = _ann_empty_vectors(spark, meta, id_col, vec_col)
+    rows = _ann_vectors(spark, store_dir, meta, id_col, vec_col)
     live_keys = (
         _ann_live_keys(spark, store_dir, meta, id_col)
         .filter(F.col("_list").isin(*probe))
@@ -1192,45 +1174,35 @@ def compact_ann_store(
     id_col: str = "vec_id",
 ) -> int:
     """Re-bound reader work to one row per live id: keep each id's
-    winning row (same :func:`_ann_winners` rule as every read),
-    rewrite partitioned, two-rename swap with the shared recovery
-    healing the crash window. Winning rows KEEP their original
-    ``_seq``/``_rh`` — the live-key relation (keys/) references rows
-    by those columns, so preserving them means compaction never has
-    to rewrite keys/ and there is no crash window where the two
-    artifacts disagree (a reset-to-zero would need both swaps to be
-    atomic together). Probe results are UNCHANGED by compaction — the
-    winner set is identical. Replays after compaction re-add rows
+    winning row (same :func:`_ann_winners` rule as every read) and
+    rewrite it partitioned (``store.rewrite``). Winning rows KEEP their
+    original ``_seq``/``_rh`` and tag — the live-key relation (keys/)
+    references rows by those columns, so preserving them means
+    compaction never has to rewrite keys/ and there is no crash window
+    where the two artifacts disagree (a reset-to-zero would need both
+    swaps to be atomic together). Probe results are UNCHANGED by
+    compaction — the winner set is identical. Replays after compaction re-add rows
     under later seqs the reader dedup absorbs. Returns the
-    post-compaction row count. Single-writer maintenance job (the
-    shared store-rewrite assumption).
+    post-compaction row count.
 
     The SQ8 sidecar (q8/) is re-bounded in the same pass: rebuilt from
     the compacted winners (quantization is a pure function of the
-    stored vector, so rebuild ≡ catch-up), own two-rename swap, and
+    stored vector, so rebuild ≡ catch-up), its own rewrite, and
     ``q8_seq`` re-pinned to the sidecar seq — which also HEALS a
     pre-sidecar store into the narrow-scan layout."""
-    import os
-    import shutil
-
     meta = _ann_meta(store_dir, "compaction")
     vecs = _ann_dirs(store_dir)
-    recover_dir(vecs)
-    if not os.path.isdir(vecs) or not _has_parquet_files(vecs):
+    rows = store.read(spark, vecs)
+    if rows is None:
         # absent OR created-but-unbackfilled (zero part files): nothing
-        # to re-bound, and reading the fileless dataset would raise
+        # to re-bound
         return 0
     compacted = (
-        _ann_winners(spark.read.parquet(vecs), id_col)
-        .withColumn("batch_key", F.lit("compacted"))
+        _ann_winners(rows, id_col)
         .repartition("_list")
         .sortWithinPartitions("_list", id_col)
     )
-    tmp = vecs + ".compact-tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
-    compacted.write.mode("overwrite").partitionBy("_list").parquet(tmp)
-    n = spark.read.parquet(tmp).count()
-    swap_dir(tmp, vecs)
+    n = store.rewrite(spark, compacted, vecs, partition_col="_list")
 
     qdir = _ann_q8_dir(store_dir)
     recover_dir(qdir)
@@ -1246,10 +1218,7 @@ def compact_ann_store(
         .repartition("_list")
         .sortWithinPartitions("_list", id_col)
     )
-    qtmp = qdir + ".compact-tmp"
-    shutil.rmtree(qtmp, ignore_errors=True)
-    q8.write.mode("overwrite").partitionBy("_list").parquet(qtmp)
-    swap_dir(qtmp, qdir)
+    store.rewrite(spark, q8, qdir, partition_col="_list")
     _ann_set_meta_field(store_dir, "q8_seq", int(meta["seq"]))
     return n
 
@@ -1368,20 +1337,12 @@ def ann_store_knn_join(
     # partition pruning can't see through the live-key semi-join.
     probe = sorted(r["_list"] for r in qx.select("_list").distinct().collect())
     flt = F.col("_list").isin(*probe) if probe else F.lit(False)
-    vecs = _ann_dirs(store_dir)
-    recover_dir(vecs)
     live_keys = (
         _ann_live_keys(spark, store_dir, meta, id_col)
         .filter(flt)
         .select(id_col, "_seq", "_rh")
     )
-    raw = (
-        spark.read.parquet(vecs)
-        if _has_parquet_files(vecs)
-        # created-but-unbackfilled store: empty typed relation, 0-row
-        # result per query instead of unable-to-infer-schema
-        else _ann_empty_vectors(spark, meta, id_col, vec_col)
-    )
+    raw = _ann_vectors(spark, store_dir, meta, id_col, vec_col)
     fetched = (
         raw
         .filter(flt)
@@ -1715,13 +1676,7 @@ def ann_store_topk_quantized(
         id_col, vec_col,
     )
     triples = stage1.collect()
-    vecs = _ann_dirs(store_dir)
-    recover_dir(vecs)
-    rows = (
-        spark.read.parquet(vecs)
-        if _has_parquet_files(vecs)
-        else _ann_empty_vectors(spark, meta, id_col, vec_col)
-    )
+    rows = _ann_vectors(spark, store_dir, meta, id_col, vec_col)
     ids = [r[0] for r in triples]
     local = spark.createDataFrame(triples, stage1.schema)
     fetched = (

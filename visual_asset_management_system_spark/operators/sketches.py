@@ -45,11 +45,15 @@ the scale extension of that surface, per the LLM-pipeline mandate.
 
 from __future__ import annotations
 
+import functools
+import os
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..streaming.driver import recover_dir, run_micro_batches, swap_dir
+from . import store
+from ..streaming.driver import run_micro_batches
 from .sampling import _HASH_SPACE, sample_hash
 
 #: default sketch size — relative σ ≈ 1/√62 ≈ 12.7%
@@ -191,6 +195,25 @@ def kmv_intersect_count(a: Column, b: Column, union_sketch: Column) -> Column:
 # ---------------------------------------------------------------------------
 
 
+@functools.cache
+def _cms_cells(key_col: str, depth: int, width: int, salt: str) -> Column:
+    """The ``depth`` (d, c) cells of each ``key_col`` value, exploded —
+    built once per arguments (the shared build/probe cell format)."""
+    return F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(d).alias("d"),
+                    F.pmod(
+                        sample_hash(F.col(key_col), f"{salt}{d}"), F.lit(width)
+                    ).alias("c"),
+                )
+                for d in range(depth)
+            ]
+        )
+    )
+
+
 def cms_build(
     df: DataFrame,
     key_col: str,
@@ -208,21 +231,8 @@ def cms_build(
     otherwise land in a spurious (d, NULL) row); :func:`cms_probe`
     mirrors this by estimating 0 for a NULL key."""
     df = df.filter(F.col(key_col).isNotNull())
-    cells = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(d).alias("d"),
-                    F.pmod(
-                        sample_hash(F.col(key_col), f"{salt}{d}"), F.lit(width)
-                    ).alias("c"),
-                )
-                for d in range(depth)
-            ]
-        )
-    )
     return (
-        df.select(cells.alias("cell"))
+        df.select(_cms_cells(key_col, depth, width, salt).alias("cell"))
         .groupBy(F.col("cell.d").alias("d"), F.col("cell.c").alias("c"))
         .agg(F.count(F.lit(1)).alias("cell_cnt"))
     )
@@ -248,19 +258,7 @@ def cms_probe(
     groupBy over keys.columns collapses duplicates) — callers that need
     row-for-row output must join the estimates back on the key columns,
     not rely on positional alignment."""
-    cells = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(d).alias("d"),
-                    F.pmod(
-                        sample_hash(F.col(key_col), f"{salt}{d}"), F.lit(width)
-                    ).alias("c"),
-                )
-                for d in range(depth)
-            ]
-        )
-    )
+    cells = _cms_cells(key_col, depth, width, salt)
     expanded = keys.select("*", cells.alias("cell")).select(
         *keys.columns, F.col("cell.d").alias("d"), F.col("cell.c").alias("c")
     )
@@ -276,20 +274,29 @@ def cms_probe(
 # ---------------------------------------------------------------------------
 #
 # KMV state is a JOIN-SEMILATTICE: the merge ("union the hash sets,
-# keep the k smallest") is idempotent, commutative, and associative.
-# That makes this the simplest maintained store in the engine — unlike
-# the substring-dedup gram store (corpus.py, whose per-batch COUNTS
-# must dedupe replays by tag) an at-least-once redelivery here is
-# exactly-once FOR FREE: re-appended minima are duplicates the reader's
-# distinct removes. No exclude-tags machinery, no commit ordering
-# between sink and state; the only discipline the store needs is the
-# two-rename compaction swap shared with every other store rewrite.
+# keep the k smallest") is idempotent, commutative, and associative, so
+# an at-least-once redelivery is exactly-once FOR FREE: re-appended
+# minima are duplicates the reader's distinct removes. Append, read and
+# compaction are the shared protocol of operators/store.py.
 
 
 def _minima_dir(store_dir: str) -> str:
-    import os as _os
+    return os.path.join(store_dir, "minima")
 
-    return _os.path.join(store_dir, "minima")
+
+def _stored_rows(spark, live: str, cols: list[tuple[str, str | None]]):
+    """A store relation's rows; for a store holding no data, an empty
+    relation of ``cols`` — (name, DDL type) pairs, type None for a
+    caller-named column whose type an empty store never saw."""
+    rows = store.read(spark, live)
+    if rows is not None:
+        return rows
+    return spark.range(0).select(
+        *[
+            (F.lit(None) if t is None else F.lit(None).cast(t)).alias(c)
+            for c, t in cols
+        ]
+    )
 
 
 def kmv_store_update(
@@ -310,10 +317,7 @@ def kmv_store_update(
     runtime this is an INSERT into a clustered table."""
     group_cols = list(group_cols or [])
     minima = _minima_rows(new_df, key_col, group_cols, k, salt)
-    recover_dir(_minima_dir(store_dir))
-    minima.withColumn(
-        "batch_key", F.lit(batch_key).cast("string")
-    ).write.mode("append").parquet(_minima_dir(store_dir))
+    store.append(minima, _minima_dir(store_dir), batch_key)
 
 
 def kmv_store_sketch(
@@ -328,12 +332,14 @@ def kmv_store_sketch(
     ever appended — regardless of batch boundaries, ordering, or
     replays (tested). Pass ``group_cols=[]`` (default) for a store
     built without groups. Reader work grows with appended batches until
-    ``compact_kmv_store`` re-bounds it."""
+    ``compact_kmv_store`` re-bounds it. An empty store reads as no
+    groups."""
     group_cols = list(group_cols or [])
-    recover_dir(_minima_dir(store_dir))
-    rows = spark.read.parquet(_minima_dir(store_dir)).select(
-        *group_cols, "__h"
-    )
+    rows = _stored_rows(
+        spark,
+        _minima_dir(store_dir),
+        [*((g, None) for g in group_cols), ("__h", "bigint")],
+    ).select(*group_cols, "__h")
     return (
         _topk_hashes(rows, group_cols, k)
         .groupBy(*group_cols)
@@ -348,32 +354,17 @@ def compact_kmv_store(
     k: int = DEFAULT_K,
 ) -> int:
     """Re-bound the store to ≤ groups·k rows: keep only each group's k
-    smallest minima under a synthetic tag. Unlike the gram store's
-    compaction no replay tags need excluding — a replayed append after
-    compaction re-adds rows the semilattice merge absorbs. Crash
-    safety: two renames with recover_dir healing the window.
-    Single-writer maintenance job (the store-rewrite assumption shared
-    by every maintained store here). Returns the post-compaction row
-    count."""
-    import os as _os
-    import shutil as _shutil
-    import uuid as _uuid
-
+    smallest minima. No replay tags need excluding — a replayed append
+    after compaction re-adds rows the semilattice merge absorbs.
+    Returns the post-compaction row count."""
     group_cols = list(group_cols or [])
-    minima_dir = _minima_dir(store_dir)
-    recover_dir(minima_dir)
-    if not _os.path.isdir(minima_dir):
-        return 0
-    rows = spark.read.parquet(minima_dir).select(*group_cols, "__h")
-    compacted = _topk_hashes(rows, group_cols, k).withColumn(
-        "batch_key", F.lit("compacted-" + _uuid.uuid4().hex[:8])
+    return store.compact(
+        spark,
+        _minima_dir(store_dir),
+        lambda rows: _topk_hashes(
+            rows.select(*group_cols, "__h"), group_cols, k
+        ),
     )
-    tmp = minima_dir + ".compact-tmp"
-    _shutil.rmtree(tmp, ignore_errors=True)
-    compacted.write.mode("overwrite").parquet(tmp)
-    n = spark.read.parquet(tmp).count()
-    swap_dir(tmp, minima_dir)
-    return n
 
 
 def start_kmv_sketch_stream(
@@ -415,17 +406,18 @@ def start_kmv_sketch_stream(
 # ---------------------------------------------------------------------------
 #
 # Unlike KMV, CMS state is ADDITIVE (counts, not minima), so an
-# at-least-once replay would double-count — this store therefore uses
-# the corpus.py gram-store discipline: every append is tagged with its
-# batch key and the reader dedups replays with max-per-(cell, tag)
-# before summing. Per-batch appends are bounded at depth·width rows
-# (the batch is reduced to its grid BEFORE touching the store).
+# at-least-once replay would double-count — the reader and compaction
+# merge with store.additive_merge (max per (cell, tag), then sum).
+# Per-batch appends are bounded at depth·width rows (the batch is
+# reduced to its grid BEFORE touching the store).
 
 
 def _cells_dir(store_dir: str) -> str:
-    import os as _os
+    return os.path.join(store_dir, "cells")
 
-    return _os.path.join(store_dir, "cells")
+
+def _cms_merge(rows: DataFrame) -> DataFrame:
+    return store.additive_merge(rows, ["d", "c"], "cell_cnt")
 
 
 def cms_store_update(
@@ -443,10 +435,7 @@ def cms_store_update(
     on the write path.
 
     ``batch_key`` is REQUIRED (ValueError on None): the additive
-    state's entire replay discipline hangs on the tag. An untagged
-    (NULL) append is unfixable downstream — NULL.isin(tags) and
-    ~NULL.isin(tags) are both NULL, so compact_cms_store's keep/old
-    split would silently drop the rows, and cms_store_read's
+    state's entire replay discipline hangs on the tag — the reader's
     max-per-(cell, tag) dedup would collapse two distinct untagged
     appends into one. (The KMV store's kmv_store_update keeps an
     optional tag because its semilattice merge needs no replay
@@ -455,26 +444,28 @@ def cms_store_update(
         raise ValueError(
             "cms_store_update requires a non-None batch_key: the "
             "additive CMS store dedups replays by tag, and untagged "
-            "appends are dropped by compaction's keep/old split"
+            "appends would collapse into one"
         )
-    recover_dir(_cells_dir(store_dir))
-    cms_build(new_df, key_col, depth, width, salt).withColumn(
-        "batch_key", F.lit(batch_key).cast("string")
-    ).write.mode("append").parquet(_cells_dir(store_dir))
+    store.append(
+        cms_build(new_df, key_col, depth, width, salt),
+        _cells_dir(store_dir),
+        batch_key,
+    )
 
 
 def cms_store_read(spark, store_dir: str) -> DataFrame:
     """Current grid: dedup replayed appends (max per (cell, batch_key)
     — a replay rewrites identical counts under the same tag), then sum
     cells across batches. Output matches :func:`cms_build` over the
-    union of every batch appended exactly once (tested)."""
-    recover_dir(_cells_dir(store_dir))
-    rows = spark.read.parquet(_cells_dir(store_dir))
-    return (
-        rows.groupBy("d", "c", "batch_key")
-        .agg(F.max("cell_cnt").alias("_c1"))
-        .groupBy("d", "c")
-        .agg(F.sum("_c1").cast("bigint").alias("cell_cnt"))
+    union of every batch appended exactly once (tested); an empty store
+    reads as no cells."""
+    return _cms_merge(
+        _stored_rows(
+            spark,
+            _cells_dir(store_dir),
+            [("d", "int"), ("c", "bigint"), ("cell_cnt", "bigint"),
+             (store.TAG, "string")],
+        )
     )
 
 
@@ -483,42 +474,14 @@ def compact_cms_store(
     store_dir: str,
     exclude_tags: tuple[str, ...] = (),
 ) -> int:
-    """Freeze the reader's dedup-then-sum into one row per cell under a
-    synthetic tag (≤ depth·width rows total). Collapsing a batch's rows
-    discards its tag, so a LATER replay of that batch would re-add
-    counts nothing dedups — pass the tags of any batch that may still
-    replay in ``exclude_tags`` (under a stream wrapper: the most recent
-    micro-batch); excluded tags are carried through verbatim. Crash
-    safety: the shared two-rename swap + recover_dir healing. Returns the
+    """Freeze the reader's dedup-then-sum into one row per cell
+    (≤ depth·width rows total). Pass the tags of any batch that may
+    still replay in ``exclude_tags`` (under a stream wrapper: the most
+    recent micro-batch); they are carried through verbatim. Returns the
     post-compaction row count."""
-    import os as _os
-    import shutil as _shutil
-    import uuid as _uuid
-
-    cells_dir = _cells_dir(store_dir)
-    recover_dir(cells_dir)
-    if not _os.path.isdir(cells_dir):
-        return 0
-    store = spark.read.parquet(cells_dir)
-    keep = store.filter(F.col("batch_key").isin(list(exclude_tags)))
-    old = store.filter(~F.col("batch_key").isin(list(exclude_tags)))
-    compacted = (
-        old.groupBy("d", "c", "batch_key")
-        .agg(F.max("cell_cnt").alias("_c1"))
-        .groupBy("d", "c")
-        .agg(F.sum("_c1").cast("bigint").alias("cell_cnt"))
-        .withColumn(
-            "batch_key", F.lit("compacted-" + _uuid.uuid4().hex[:8])
-        )
-        .select("d", "c", "cell_cnt", "batch_key")
+    return store.compact(
+        spark, _cells_dir(store_dir), _cms_merge, keep_tags=exclude_tags
     )
-    out = compacted.unionByName(keep.select("d", "c", "cell_cnt", "batch_key"))
-    tmp = cells_dir + ".compact-tmp"
-    _shutil.rmtree(tmp, ignore_errors=True)
-    out.write.mode("overwrite").parquet(tmp)
-    n = spark.read.parquet(tmp).count()
-    swap_dir(tmp, cells_dir)
-    return n
 
 
 def start_cms_sketch_stream(
@@ -533,13 +496,10 @@ def start_cms_sketch_stream(
     salt: str = "cms",
 ):
     """Structured Streaming wrapper for the maintained count-min store:
-    one bounded (≤ depth·width rows) tagged append per micro-batch.
-    Each batch's tag is its micro-batch id, so a post-crash replay of
-    the SAME batch rewrites identical counts under the SAME tag and the
-    reader's max-per-(cell, tag) dedup absorbs it — the additive
-    state's equivalent of the KMV stream's free idempotence. When
-    compacting a store this stream feeds, exclude the most recent
-    batch's tag (see compact_cms_store)."""
+    one bounded (≤ depth·width rows) append per micro-batch, tagged
+    with its micro-batch id. When compacting a store this stream
+    feeds, exclude the most recent batch's tag (see
+    compact_cms_store)."""
     stream = spark.readStream.schema(schema).format("json").load(docs_dir)
 
     def step(batch, batch_id: int) -> None:
@@ -578,6 +538,19 @@ def start_cms_sketch_stream(
 # discipline — the KMV store class, not the CMS class).
 
 
+@functools.cache
+def _bloom_bits(
+    key_col: str, m: int, depth: int, salt: str
+) -> tuple[Column, ...]:
+    """The ``depth`` salted bit positions (int, in [0, m)) of each
+    ``key_col`` value — built once per arguments (the shared
+    build/probe/flag bit format)."""
+    return tuple(
+        F.pmod(sample_hash(F.col(key_col), f"{salt}{i}"), F.lit(m)).cast("int")
+        for i in range(depth)
+    )
+
+
 def bloom_build(
     df: DataFrame,
     key_col: str,
@@ -591,16 +564,7 @@ def bloom_build(
     distinct so the build is map-side combinable. NULL keys are
     excluded (the KMV/CMS guard). False-positive rate ≈
     (1 − e^{−d·n/m})^d for n distinct keys."""
-    bits = F.explode(
-        F.array(
-            *[
-                F.pmod(
-                    sample_hash(F.col(key_col), f"{salt}{i}"), F.lit(m)
-                ).cast("int")
-                for i in range(depth)
-            ]
-        )
-    )
+    bits = F.explode(F.array(*_bloom_bits(key_col, m, depth, salt)))
     return (
         df.filter(F.col(key_col).isNotNull())
         .select(bits.alias("bit"))
@@ -629,16 +593,7 @@ def bloom_probe(
     bit relation broadcasts (≤ m rows by construction); a NULL key
     probes false, mirroring bloom_build's exclusion. Same distinct-keys
     contract as cms_probe."""
-    bits = F.explode(
-        F.array(
-            *[
-                F.pmod(
-                    sample_hash(F.col(key_col), f"{salt}{i}"), F.lit(m)
-                ).cast("int")
-                for i in range(depth)
-            ]
-        )
-    )
+    bits = F.explode(F.array(*_bloom_bits(key_col, m, depth, salt)))
     expanded = keys.select("*", bits.alias("bit"))
     return (
         expanded.join(
@@ -664,9 +619,11 @@ def bloom_probe(
 
 
 def _bits_dir(store_dir: str) -> str:
-    import os as _os
+    return os.path.join(store_dir, "bits")
 
-    return _os.path.join(store_dir, "bits")
+
+def _bloom_merge(rows: DataFrame) -> DataFrame:
+    return rows.select("bit").distinct()
 
 
 def bloom_store_update(
@@ -681,47 +638,27 @@ def bloom_store_update(
 ) -> None:
     """Append one batch's set bits (≤ m rows) to the maintained store,
     tagged for audit only (semilattice state — replays are absorbed)."""
-    recover_dir(_bits_dir(store_dir))
-    bloom_build(new_df, key_col, m, depth, salt).withColumn(
-        "batch_key", F.lit(batch_key).cast("string")
-    ).write.mode("append").parquet(_bits_dir(store_dir))
+    store.append(
+        bloom_build(new_df, key_col, m, depth, salt),
+        _bits_dir(store_dir),
+        batch_key,
+    )
 
 
 def bloom_store_read(spark, store_dir: str) -> DataFrame:
     """Current bit relation: distinct over every appended batch — by
     the semilattice property equal to bloom_build over the union of
-    all batches, regardless of boundaries, ordering, or replays."""
-    recover_dir(_bits_dir(store_dir))
-    return (
-        spark.read.parquet(_bits_dir(store_dir)).select("bit").distinct()
+    all batches, regardless of boundaries, ordering, or replays. An
+    empty store reads as no bits."""
+    return _bloom_merge(
+        _stored_rows(spark, _bits_dir(store_dir), [("bit", "int")])
     )
 
 
 def compact_bloom_store(spark, store_dir: str) -> int:
-    """Re-bound the store to ≤ m rows (one row per set bit) under a
-    synthetic tag; two-rename swap with crash-window recovery (the
-    shared store-rewrite discipline). Returns the post-compaction row
-    count."""
-    import os as _os
-    import shutil as _shutil
-    import uuid as _uuid
-
-    bits_dir = _bits_dir(store_dir)
-    recover_dir(bits_dir)
-    if not _os.path.isdir(bits_dir):
-        return 0
-    compacted = (
-        spark.read.parquet(bits_dir)
-        .select("bit")
-        .distinct()
-        .withColumn("batch_key", F.lit("compacted-" + _uuid.uuid4().hex[:8]))
-    )
-    tmp = bits_dir + ".compact-tmp"
-    _shutil.rmtree(tmp, ignore_errors=True)
-    compacted.write.mode("overwrite").parquet(tmp)
-    n = spark.read.parquet(tmp).count()
-    swap_dir(tmp, bits_dir)
-    return n
+    """Re-bound the store to ≤ m rows (one row per set bit). Returns
+    the post-compaction row count."""
+    return store.compact(spark, _bits_dir(store_dir), _bloom_merge)
 
 
 def start_bloom_sketch_stream(
@@ -782,8 +719,7 @@ def bloom_flag(
         mask[r["bit"]] = True
     mask_df = spark.createDataFrame([(mask,)], "__bloom_mask array<boolean>")
     cond = None
-    for i in range(depth):
-        bit = F.pmod(sample_hash(F.col(key_col), f"{salt}{i}"), F.lit(m))
+    for bit in _bloom_bits(key_col, m, depth, salt):
         hit = F.coalesce(
             F.element_at("__bloom_mask", (bit + 1).cast("int")),
             F.lit(False),
@@ -955,9 +891,7 @@ def sample_quantiles(
 # re-take the k smallest per group" is idempotent, commutative, and
 # associative, and overlapping/replayed appends contribute
 # byte-identical (group, id) rows the merge's dedup absorbs — so an
-# at-least-once redelivery is exactly-once FOR FREE: no exclude-tags
-# machinery, no sink/state commit ordering. The only discipline is the
-# two-rename compaction swap shared with every store rewrite here.
+# at-least-once redelivery is exactly-once FOR FREE.
 # The store keeps SAMPLE ROWS (id, value columns, ranking hash), not
 # scalar hashes: the read side answers any quantile question over any
 # value column the rows carry, at any coarser group level, without a
@@ -967,9 +901,7 @@ def sample_quantiles(
 
 
 def _bottomk_dir(store_dir: str) -> str:
-    import os as _os
-
-    return _os.path.join(store_dir, "sample")
+    return os.path.join(store_dir, "sample")
 
 
 def _bottomk_meta(
@@ -1001,9 +933,8 @@ def _bottomk_meta(
     reads, never admit wrong ones). Stores predating the sidecar
     validate nothing (None meta)."""
     import json as _json
-    import os as _os
 
-    path = _os.path.join(store_dir, "sample_k.json")
+    path = os.path.join(store_dir, "sample_k.json")
     meta: dict | None = None
     try:
         with open(path) as f:
@@ -1063,11 +994,11 @@ def _bottomk_meta(
             "salt": salt if meta is None else (meta.get("salt") or salt),
         }
         if meta != new:
-            _os.makedirs(store_dir, exist_ok=True)
+            os.makedirs(store_dir, exist_ok=True)
             tmp = path + ".tmp"
             with open(tmp, "w") as f:
                 _json.dump(new, f)
-            _os.replace(tmp, path)
+            os.replace(tmp, path)
 
 
 def bottomk_store_update(
@@ -1090,14 +1021,11 @@ def bottomk_store_update(
     first otherwise); NULL ids are excluded by the shared guard in
     :func:`bottomk_sample`."""
     sample = bottomk_sample(new_df, id_col, k, group_cols, salt)
-    recover_dir(_bottomk_dir(store_dir))
     # validate + record format params BEFORE the append
     _bottomk_meta(
         store_dir, "update", k, list(group_cols or []), salt, record=True
     )
-    sample.withColumn(
-        "batch_key", F.lit(batch_key).cast("string")
-    ).write.mode("append").parquet(_bottomk_dir(store_dir))
+    store.append(sample, _bottomk_dir(store_dir), batch_key)
 
 
 def bottomk_store_sample(
@@ -1119,12 +1047,14 @@ def bottomk_store_sample(
     SMALLER k are exact by the semilattice property; a mismatched
     ``group_cols`` refuses too (it would mis-merge per-group
     samples)."""
-    _bottomk_meta(
-        store_dir, "read", k, list(group_cols or []), None, record=False
+    group_cols = list(group_cols or [])
+    _bottomk_meta(store_dir, "read", k, group_cols, None, record=False)
+    rows = _stored_rows(
+        spark,
+        _bottomk_dir(store_dir),
+        [*((c, None) for c in (*group_cols, id_col)), ("__h", "bigint")],
     )
-    recover_dir(_bottomk_dir(store_dir))
-    rows = spark.read.parquet(_bottomk_dir(store_dir)).drop("batch_key")
-    return bottomk_merge(rows, id_col, k, group_cols)
+    return bottomk_merge(rows.drop(store.TAG), id_col, k, group_cols)
 
 
 def start_bottomk_sample_stream(
@@ -1168,34 +1098,17 @@ def compact_bottomk_store(
     group_cols: list[str] | None = None,
 ) -> int:
     """Re-bound the store to ≤ groups·k rows: keep each group's merged
-    bottom-k under a synthetic tag. No replay tags need excluding — a
-    replayed append after compaction re-adds rows the semilattice
-    merge absorbs. Crash safety: two renames with the shared
-    recover_dir healing. Single-writer maintenance job. Returns the
+    bottom-k. No replay tags need excluding — a replayed append after
+    compaction re-adds rows the semilattice merge absorbs. Returns the
     post-compaction row count."""
-    import os as _os
-    import shutil as _shutil
-    import uuid as _uuid
+    group_cols = list(group_cols or [])
+    _bottomk_meta(store_dir, "compaction", k, group_cols, None, record=False)
 
-    _bottomk_meta(
-        store_dir, "compaction", k, list(group_cols or []), None,
-        record=False,
-    )
-    d = _bottomk_dir(store_dir)
-    recover_dir(d)
-    if not _os.path.isdir(d):
-        return 0
-    # the rewrite re-bounds the store
-    _bottomk_meta(
-        store_dir, "compaction", k, list(group_cols or []), None,
-        record=True,
-    )
-    compacted = bottomk_merge(
-        spark.read.parquet(d).drop("batch_key"), id_col, k, group_cols
-    ).withColumn("batch_key", F.lit("compacted-" + _uuid.uuid4().hex[:8]))
-    tmp = d + ".compact-tmp"
-    _shutil.rmtree(tmp, ignore_errors=True)
-    compacted.write.mode("overwrite").parquet(tmp)
-    n = spark.read.parquet(tmp).count()
-    swap_dir(tmp, d)
-    return n
+    def merge(rows: DataFrame) -> DataFrame:
+        # the rewrite re-bounds the store: lower the recorded k first
+        _bottomk_meta(
+            store_dir, "compaction", k, group_cols, None, record=True
+        )
+        return bottomk_merge(rows.drop(store.TAG), id_col, k, group_cols)
+
+    return store.compact(spark, _bottomk_dir(store_dir), merge)
