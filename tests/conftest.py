@@ -21,11 +21,22 @@ def spark():
     # 54 such failures observed in one r15 run). A throwaway temp dir
     # keeps the suite hermetic; product sessions are unaffected.
     warehouse = tempfile.mkdtemp(prefix="vams-test-warehouse-")
+    # The job budgets (jobs_and_tasks) read every stage of the jobs they
+    # count from the status store. At its default 1,000-stage cap the
+    # store evicts SKIPPED stages first, however recent, so a trim that
+    # lands inside a counted call drops that call's skipped stages
+    # (seen: "stage 13696 missing from the status store" after ~13k
+    # stages). The suite runs fewer than 100,000 stages; a retained
+    # stage costs ~2.3 KB of driver heap.
     s = get_spark(
         app_name="spark-vams-tests",
         master="local[8]",
         shuffle_partitions=8,
-        extra_conf={"spark.sql.warehouse.dir": warehouse},
+        extra_conf={
+            "spark.sql.warehouse.dir": warehouse,
+            "spark.ui.retainedStages": "100000",
+            "spark.ui.retainedJobs": "100000",
+        },
     )
     yield s
     s.stop()

@@ -234,6 +234,7 @@ def test_suggest_serves_from_maintained_table(spark, tmp_path):
     from visual_asset_management_system_spark.operators.inverted_index import (
         suggest_index_update,
     )
+    from visual_asset_management_system_spark.streaming.cdc import read_sink
 
     state = str(tmp_path / "sugg")
     suggest_index_update(
@@ -247,7 +248,7 @@ def test_suggest_serves_from_maintained_table(spark, tmp_path):
         "b1",
     )
     t = dict(tables(spark, SF))
-    t["suggest"] = spark.read.parquet(state + "/suggest")
+    t["suggest"] = read_sink(spark, state + "/suggest")
     svc = CatalogService(t)
     got = svc.suggest("zep").collect()
     assert [r["suggestion"] for r in got] == ["zephyr"]

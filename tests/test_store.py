@@ -225,6 +225,41 @@ def test_first_append_crash_reads_empty_and_replays(spark, tmp_path, name):
     assert read(spark, crashed) == want
 
 
+@pytest.mark.parametrize("name", sorted(_STORES))
+def test_crashed_append_output_is_not_promoted_by_the_next(
+    spark, tmp_path, name
+):
+    """A crashed append's committed task output left under the
+    relation's ``_temporary`` (the first-append crash layout, planted
+    into a store that already holds data) never enters the store: the
+    next append into the relation promotes its own rows only."""
+    update, read, relations, _later = _STORES[name]
+    d = str(tmp_path / "store")
+    update(spark, d)
+    want = read(spark, d)
+    live = os.path.normpath(os.path.join(d, relations[-1]))
+
+    crashed = str(tmp_path / "crashed")
+    shutil.copytree(live, crashed)
+    _crash_first_append(crashed)
+    task = os.path.join(crashed, "_temporary", "0", "task_crashed")
+    for root, _dirs, files in os.walk(task):
+        for f in files:  # names no committed file has
+            if f.endswith(".crc"):
+                os.remove(os.path.join(root, f))
+            else:
+                os.rename(os.path.join(root, f), os.path.join(root, "crashed-" + f))
+    shutil.move(os.path.join(crashed, "_temporary"), live)
+
+    update(spark, d)  # the next append into the relation
+    promoted = [
+        f for _root, _dirs, files in os.walk(live) for f in files
+        if f.startswith("crashed-")
+    ]
+    assert promoted == []
+    assert read(spark, d) == want
+
+
 class _Crash(Exception):
     pass
 

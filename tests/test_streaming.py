@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from visual_asset_management_system_spark.streaming.cdc import (
     apply_cdc_batch,
+    read_sink,
     start_search_table_stream,
 )
 
@@ -56,7 +57,7 @@ def test_apply_cdc_batch_upsert_and_remove(spark, tmp_path):
         "asset_id string, new_image string, event_time timestamp",
     )
     apply_cdc_batch(batch1, recompute, sink)
-    out = spark.read.parquet(sink)
+    out = read_sink(spark, sink)
     assert {r["asset_id"] for r in out.collect()} == {"asset_1", "asset_2"}
 
     # MODIFY asset_1 (idempotent re-upsert), REMOVE asset_2, INSERT asset_3
@@ -69,7 +70,7 @@ def test_apply_cdc_batch_upsert_and_remove(spark, tmp_path):
         batch1.schema,
     )
     apply_cdc_batch(batch2, recompute, sink)
-    rows = {r["asset_id"]: r["doc"] for r in spark.read.parquet(sink).collect()}
+    rows = {r["asset_id"]: r["doc"] for r in read_sink(spark, sink).collect()}
     assert set(rows) == {"asset_1", "asset_3"}
     assert rows["asset_1"] == "NAME 1"
 
@@ -98,7 +99,7 @@ def test_streaming_wrapper_available_now(spark, tmp_path):
         spark, changelog, sink, recompute, ckpt
     )
     q.awaitTermination(120)
-    out = spark.read.parquet(sink)
+    out = read_sink(spark, sink)
     assert [r["asset_id"] for r in out.collect()] == ["asset_5"]
 
     # second batch arrives; checkpoint resumes without reprocessing batch 1
@@ -120,15 +121,18 @@ def test_streaming_wrapper_available_now(spark, tmp_path):
         spark, changelog, sink, recompute, ckpt
     )
     q2.awaitTermination(120)
-    ids = {r["asset_id"] for r in spark.read.parquet(sink).collect()}
+    ids = {r["asset_id"] for r in read_sink(spark, sink).collect()}
     assert ids == {"asset_5", "asset_7"}
 
 
 def test_compact_sink_rewrites_only_crowded_partitions(spark, tmp_path):
     """Compaction coalesces partitions whose file count exceeds the
-    threshold, leaves compact partitions byte-identical, and preserves
-    every row."""
+    threshold into a fresh version directory, leaves the manifest
+    entries and files of compact partitions byte-identical, and
+    preserves every row."""
     from visual_asset_management_system_spark.streaming.cdc import (
+        _commit_manifest,
+        _load_manifest,
         _partition_of,
         compact_sink,
     )
@@ -145,39 +149,53 @@ def test_compact_sink_rewrites_only_crowded_partitions(spark, tmp_path):
             keys, ["database_id", "asset_id"], "left_semi"
         ).withColumn("doc", F.upper("asset_name"))
 
-    # crowd the partition dirs the way multi-task rewrites / append-mode
-    # ingest do at scale: several append passes into the same _part dirs
+    # crowd half the partition dirs the way multi-task rewrites do at
+    # scale (several append passes into the same _part dirs of version
+    # v0), write the other half one file each (v1), and publish both
+    # in one manifest commit
     docs = _partition_of(
         recompute(base.select("database_id", "asset_id")),
         ["database_id", "asset_id"],
     )
+    crowded_src = docs.filter(F.col("_part") >= 16)
     for i in range(3):
-        chunk = docs.filter(F.xxhash64("asset_id", F.lit(i)) % 3 == 0)
-        chunk.write.partitionBy("_part").mode("append").parquet(sink)
-    before_rows = {r["asset_id"] for r in spark.read.parquet(sink).collect()}
+        chunk = crowded_src.filter(F.xxhash64("asset_id", F.lit(i)) % 3 == 0)
+        chunk.write.partitionBy("_part").mode("append").parquet(
+            os.path.join(sink, "data", "v0")
+        )
+    docs.filter(F.col("_part") < 16).coalesce(1).write.partitionBy(
+        "_part"
+    ).parquet(os.path.join(sink, "data", "v1"))
+    _commit_manifest(sink, {
+        int(d.split("=", 1)[1]): f"data/{v}/{d}"
+        for v in ("v0", "v1")
+        for d in os.listdir(os.path.join(sink, "data", v))
+        if d.startswith("_part=")
+    })
+    before_rows = {r["asset_id"] for r in read_sink(spark, sink).collect()}
+    man_before = _load_manifest(sink)
     before = _dir_snapshot(sink)
 
     compacted = compact_sink(spark, sink, max_files_per_partition=1)
     assert compacted  # at least one crowded partition was rewritten
+    assert all(p >= 16 for p in compacted)  # and no single-file one
 
+    man_after = _load_manifest(sink)
     after = _dir_snapshot(sink)
-    compacted_dirs = {f"_part={p}" for p in compacted}
-
-    def _dir_of(path: str) -> str:
-        return path.replace(os.sep, "/").split("/", 1)[0]
-
-    for d in compacted_dirs:
-        n_files = sum(
-            1 for path in after
-            if _dir_of(path) == d and path.endswith(".parquet")
-        )
-        assert n_files == 1, f"{d} not coalesced"
-    # untouched partitions are byte-identical
-    for path, sig in before.items():
-        if _dir_of(path) not in compacted_dirs:
-            assert after.get(path) == sig, f"untouched file changed: {path}"
+    for p in compacted:
+        d = os.path.join(sink, man_after[p])
+        n_files = sum(1 for f in os.listdir(d) if f.endswith(".parquet"))
+        assert n_files == 1, f"_part={p} not coalesced"
+    # untouched partitions keep their entry and are byte-identical
+    for p, rel in man_before.items():
+        if p in compacted:
+            continue
+        assert man_after[p] == rel
+        for path, sig in before.items():
+            if path.startswith(rel + "/"):
+                assert after.get(path) == sig, f"untouched file changed: {path}"
     assert {
-        r["asset_id"] for r in spark.read.parquet(sink).collect()
+        r["asset_id"] for r in read_sink(spark, sink).collect()
     } == before_rows
 
 
@@ -256,11 +274,11 @@ def test_routed_stream_available_now(spark, tmp_path):
     # link event re-indexed BOTH endpoints; excluded-prefix event dropped
     asset_keys = {
         (r["database_id"], r["asset_id"])
-        for r in spark.read.parquet(asset_sink).collect()
+        for r in read_sink(spark, asset_sink).collect()
     }
     assert asset_keys == {("db_1", "asset_1"), ("db_2", "asset_9")}
     assert {
-        r["file_path"] for r in spark.read.parquet(file_sink).collect()
+        r["file_path"] for r in read_sink(spark, file_sink).collect()
     } == {"/f/2.glb"}
 
     # checkpoint resume: a second batch processes ONLY the new event
@@ -285,7 +303,7 @@ def test_routed_stream_available_now(spark, tmp_path):
     q2.awaitTermination(120)
     asset_keys = {
         (r["database_id"], r["asset_id"])
-        for r in spark.read.parquet(asset_sink).collect()
+        for r in read_sink(spark, asset_sink).collect()
     }
     assert asset_keys == {
         ("db_1", "asset_1"), ("db_2", "asset_9"), ("db_1", "asset_5")
@@ -293,113 +311,6 @@ def test_routed_stream_available_now(spark, tmp_path):
     # the resumed run recomputed ONLY the new event's key — a full
     # replay would have re-requested asset_1/asset_9 too
     assert seen_asset_keys[-1] == {("db_1", "asset_5")}
-
-
-def test_sink_readable_with_leftover_trash(spark, tmp_path):
-    """A crash can leave the swap's trash sibling behind; it lives
-    OUTSIDE the sink directory so partition discovery never sees it and
-    reads keep working."""
-    from visual_asset_management_system_spark.streaming.cdc import (
-        _partition_of,
-    )
-
-    sink = str(tmp_path / "sink")
-    recompute = _recompute_factory(spark)
-    schema = (
-        "seq long, event_name string, source string, database_id string, "
-        "asset_id string, new_image string, event_time timestamp"
-    )
-    batch = spark.createDataFrame(
-        [(1, "INSERT", "assets", "db_1", "asset_1", None, None)], schema
-    )
-    apply_cdc_batch(batch, recompute, sink)
-    # simulate a crash AFTER a swap promoted its staged partition but
-    # before its aside was cleared: the live dir exists, a stale aside
-    # sits in the trash sibling (junk content — it must never be read)
-    live = [d for d in os.listdir(sink) if d.startswith("_part=")][0]
-    trash = sink + ".trash"
-    os.makedirs(os.path.join(trash, live), exist_ok=True)
-    with open(os.path.join(trash, live, "junk.parquet"), "wb") as f:
-        f.write(b"not a real parquet file")
-    # trash lives OUTSIDE the sink: reads never see it
-    assert spark.read.parquet(sink).count() == 1
-    # and the next merge sweeps the ENTIRE trash sibling — including
-    # asides for partitions it does not touch (previously those leaked
-    # forever)
-    batch2 = spark.createDataFrame(
-        [(2, "INSERT", "assets", "db_1", "asset_2", None, None)], schema
-    )
-    apply_cdc_batch(batch2, recompute, sink)
-    assert spark.read.parquet(sink).count() == 2
-    assert not os.path.isdir(trash)
-
-
-def test_cdc_crash_between_renames_recovers_from_trash(spark, tmp_path):
-    """A crash BETWEEN _swap_partition_dir's two renames leaves a
-    partition's only copy in the trash and its live directory missing.
-    The next merge (the at-least-once replay) must restore it before
-    reading the sink — otherwise the partition's surviving rows (keys
-    NOT in the replayed batch) would silently vanish."""
-    sink = str(tmp_path / "sink_recover")
-    recompute = _recompute_factory(spark)
-    schema = (
-        "seq long, event_name string, source string, database_id string, "
-        "asset_id string, new_image string, event_time timestamp"
-    )
-    batch1 = spark.createDataFrame(
-        [(i, "INSERT", "assets", "db_1", f"asset_{i}", None, None) for i in range(8)],
-        schema,
-    )
-    apply_cdc_batch(batch1, recompute, sink)
-    before = {r["asset_id"] for r in spark.read.parquet(sink).collect()}
-
-    # simulate the in-window crash: one live partition dir moved aside
-    live = sorted(d for d in os.listdir(sink) if d.startswith("_part="))[0]
-    trash = sink + ".trash"
-    os.makedirs(trash, exist_ok=True)
-    os.replace(os.path.join(sink, live), os.path.join(trash, live))
-
-    batch2 = spark.createDataFrame(
-        [(100, "INSERT", "assets", "db_1", "asset_10", None, None)], schema
-    )
-    apply_cdc_batch(batch2, recompute, sink)
-    after = {r["asset_id"] for r in spark.read.parquet(sink).collect()}
-    assert after == before | {"asset_10"}
-    assert not os.path.isdir(trash)
-
-
-def test_compact_sink_recovers_trash_when_sink_dir_missing(spark, tmp_path):
-    """compact_sink must run trash recovery BEFORE its missing-sink early
-    return: a crash mid-swap can leave a partition's only copy in the
-    .trash sibling while the live sink dir is absent entirely."""
-    from visual_asset_management_system_spark.streaming.cdc import compact_sink
-
-    sink = str(tmp_path / "sink_gone")
-    recompute = _recompute_factory(spark)
-    schema = (
-        "seq long, event_name string, source string, database_id string, "
-        "asset_id string, new_image string, event_time timestamp"
-    )
-    batch = spark.createDataFrame(
-        [(i, "INSERT", "assets", "db_1", f"asset_{i}", None, None) for i in range(4)],
-        schema,
-    )
-    apply_cdc_batch(batch, recompute, sink)
-    before = {r["asset_id"] for r in spark.read.parquet(sink).collect()}
-
-    # simulate the worst crash window: every live partition dir is in
-    # the trash sibling and the sink dir itself is gone
-    trash = sink + ".trash"
-    os.makedirs(trash, exist_ok=True)
-    for d in os.listdir(sink):
-        if d.startswith("_part="):
-            os.replace(os.path.join(sink, d), os.path.join(trash, d))
-    shutil.rmtree(sink)
-
-    compact_sink(spark, sink, max_files_per_partition=1)
-    after = {r["asset_id"] for r in spark.read.parquet(sink).collect()}
-    assert after == before
-    assert not os.path.isdir(trash)
 
 
 def _dir_snapshot(root: str) -> dict[str, tuple]:
@@ -415,7 +326,13 @@ def _dir_snapshot(root: str) -> dict[str, tuple]:
 
 
 def test_cdc_merge_rewrites_only_touched_partitions(spark, tmp_path):
-    from visual_asset_management_system_spark.streaming.cdc import _partition_of
+    """A merge writes a new version of the touched partition only:
+    every other partition's data files stay byte-identical under their
+    original manifest entries."""
+    from visual_asset_management_system_spark.streaming.cdc import (
+        _load_manifest,
+        _partition_of,
+    )
 
     sink = str(tmp_path / "sink_partial")
     recompute = _recompute_factory(spark)
@@ -430,11 +347,13 @@ def test_cdc_merge_rewrites_only_touched_partitions(spark, tmp_path):
     )
     apply_cdc_batch(batch1, recompute, sink)
 
+    man_before = _load_manifest(sink)
     before = _dir_snapshot(sink)
     batch2 = spark.createDataFrame(
         [(100, "MODIFY", "assets", "db_1", "asset_3", None, None)], schema
     )
     apply_cdc_batch(batch2, recompute, sink)
+    man_after = _load_manifest(sink)
     after = _dir_snapshot(sink)
 
     touched = {
@@ -444,17 +363,27 @@ def test_cdc_merge_rewrites_only_touched_partitions(spark, tmp_path):
         ).collect()
     }
     assert len(touched) == 1
-    touched_dir = f"_part={touched.pop()}"
-    for path, sig in before.items():
-        if path.startswith("_part=") and not path.startswith(touched_dir):
-            assert after.get(path) == sig, f"untouched partition file changed: {path}"
+    (p,) = touched
+    # the new version directory holds the touched partition alone
+    new_version = os.path.join(sink, os.path.dirname(man_after[p]))
+    assert [
+        d for d in os.listdir(new_version) if d.startswith("_part=")
+    ] == [f"_part={p}"]
+    for q, rel in man_before.items():
+        if q == p:
+            continue
+        assert man_after[q] == rel
+        for path, sig in before.items():
+            if path.startswith(rel + "/"):
+                assert after.get(path) == sig, f"untouched partition file changed: {path}"
     # and the data is still a correct merge
-    rows = {r["asset_id"] for r in spark.read.parquet(sink).collect()}
+    rows = {r["asset_id"] for r in read_sink(spark, sink).collect()}
     assert rows == {f"asset_{i}" for i in range(20)}
 
 
 def test_cdc_remove_clears_emptied_partition(spark, tmp_path):
-    """A REMOVE that empties a hash partition must not leave stale rows."""
+    """A REMOVE that empties a hash partition must not leave stale rows:
+    the partition drops out of the manifest."""
     sink = str(tmp_path / "sink_empty")
     recompute = _recompute_factory(spark)
     schema = (
@@ -465,19 +394,14 @@ def test_cdc_remove_clears_emptied_partition(spark, tmp_path):
         [(1, "INSERT", "assets", "db_1", "asset_1", None, None)], schema
     )
     apply_cdc_batch(batch1, recompute, sink)
-    assert spark.read.parquet(sink).count() == 1
+    assert read_sink(spark, sink).count() == 1
 
     batch2 = spark.createDataFrame(
         [(2, "REMOVE", "assets", "db_1", "asset_1", None, None)], schema
     )
     apply_cdc_batch(batch2, recompute, sink)
-    # the lone partition dir is gone (or empty) — no stale asset_1 row
-    remaining = [
-        d for d in os.listdir(sink) if d.startswith("_part=")
-        and os.listdir(os.path.join(sink, d))
-    ]
-    if remaining:
-        assert spark.read.parquet(sink).filter("asset_id = 'asset_1'").count() == 0
+    # the lone partition is gone from the snapshot — no stale asset_1 row
+    assert read_sink(spark, sink) is None
 
 
 # ---------------------------------------------------------------------------
@@ -579,7 +503,7 @@ def test_null_path_file_event_reindexes_asset_files(spark, tmp_path):
     )
     apply_routed_cdc_batch(seed, {"file": make_recompute(v1)}, {"file": file_sink})
     assert {
-        r["file_path"] for r in spark.read.parquet(file_sink).collect()
+        r["file_path"] for r in read_sink(spark, file_sink).collect()
     } == {"/f/a.glb", "/f/b.glb"}
 
     # source of truth changed: b.glb vanished, c.glb is new — then a
@@ -601,7 +525,7 @@ def test_null_path_file_event_reindexes_asset_files(spark, tmp_path):
         file_keys_of_assets=file_keys_of_assets,
     )
     assert {
-        r["file_path"] for r in spark.read.parquet(file_sink).collect()
+        r["file_path"] for r in read_sink(spark, file_sink).collect()
     } == {"/f/a.glb", "/f/c.glb"}
 
     # NULL-path REMOVE clears every file of the asset
@@ -613,12 +537,7 @@ def test_null_path_file_event_reindexes_asset_files(spark, tmp_path):
         rmev, {"file": make_recompute(v2)}, {"file": file_sink},
         file_keys_of_assets=file_keys_of_assets,
     )
-    remaining = [
-        d for d in os.listdir(file_sink)
-        if d.startswith("_part=") and os.listdir(os.path.join(file_sink, d))
-    ]
-    if remaining:
-        assert spark.read.parquet(file_sink).count() == 0
+    assert read_sink(spark, file_sink) is None
 
 
 def test_apply_routed_cdc_batch_writes_both_sinks(spark, tmp_path):
@@ -656,10 +575,10 @@ def test_apply_routed_cdc_batch_writes_both_sinks(spark, tmp_path):
         {"asset": recompute_assets, "file": recompute_files},
         {"asset": asset_sink, "file": file_sink},
     )
-    assert {r["asset_id"] for r in spark.read.parquet(asset_sink).collect()} == {
+    assert {r["asset_id"] for r in read_sink(spark, asset_sink).collect()} == {
         "asset_1"
     }
-    assert {r["file_path"] for r in spark.read.parquet(file_sink).collect()} == {
+    assert {r["file_path"] for r in read_sink(spark, file_sink).collect()} == {
         "/f/2.glb"
     }
 
@@ -866,7 +785,7 @@ def test_cdc_maintains_inverted_index(spark, tmp_path):
     )
     apply_cdc_batch(change, recompute_for(v2), sink)
 
-    maintained = spark.read.parquet(sink).drop("_part")
+    maintained = read_sink(spark, sink)
     fresh, _ = build_inverted_index(v2, ["database_id", "asset_id"], {"body": 1.0})
     norm = lambda df: sorted(map(tuple, df.select(  # noqa: E731
         "database_id", "asset_id", "term", "tf", "dl").collect()))
@@ -1709,7 +1628,7 @@ def test_suggest_index_incremental_equals_rebuild(spark, tmp_path):
     }
     maintained = {
         tuple(r)
-        for r in spark.read.parquet(state + "/suggest")
+        for r in read_sink(spark, state + "/suggest")
         .select("prefix", "suggestion", "freq", "rank")
         .collect()
     }
@@ -1728,7 +1647,7 @@ def test_suggest_index_incremental_equals_rebuild(spark, tmp_path):
     )
     replayed = {
         tuple(r)
-        for r in spark.read.parquet(state + "/suggest")
+        for r in read_sink(spark, state + "/suggest")
         .select("prefix", "suggestion", "freq", "rank")
         .collect()
     }
@@ -1757,14 +1676,14 @@ def test_suggest_sink_compaction(spark, tmp_path):
         )
     before = {
         tuple(r)
-        for r in spark.read.parquet(state + "/suggest")
+        for r in read_sink(spark, state + "/suggest")
         .select("prefix", "suggestion", "freq", "rank")
         .collect()
     }
     compact_sink(spark, state + "/suggest", max_files_per_partition=1)
     after = {
         tuple(r)
-        for r in spark.read.parquet(state + "/suggest")
+        for r in read_sink(spark, state + "/suggest")
         .select("prefix", "suggestion", "freq", "rank")
         .collect()
     }
@@ -1805,7 +1724,7 @@ def test_suggest_compaction_under_replay(spark, tmp_path):
     def served():
         return {
             tuple(r)
-            for r in spark.read.parquet(state + "/suggest")
+            for r in read_sink(spark, state + "/suggest")
             .select("prefix", "suggestion", "freq", "rank")
             .collect()
         }
@@ -1813,7 +1732,7 @@ def test_suggest_compaction_under_replay(spark, tmp_path):
     def tokens():
         return {
             tuple(r)
-            for r in spark.read.parquet(state + "/tokens")
+            for r in read_sink(spark, state + "/tokens")
             .select("database_id", "asset_id", "token", "cnt")
             .collect()
         }
@@ -1992,7 +1911,7 @@ def test_suggest_stream_two_microbatches(spark, tmp_path):
     }
     got = {
         tuple(r)
-        for r in spark.read.parquet(state + "/suggest")
+        for r in read_sink(spark, state + "/suggest")
         .select("prefix", "suggestion", "freq", "rank")
         .collect()
     }
@@ -2054,12 +1973,80 @@ def test_suggest_update_crash_between_sinks_recovers(spark, tmp_path, monkeypatc
     }
     got = {
         tuple(r)
-        for r in spark.read.parquet(state + "/suggest")
+        for r in read_sink(spark, state + "/suggest")
         .select("prefix", "suggestion", "freq", "rank")
         .collect()
     }
     assert got == expected
     assert "r" in {row[0] for row in got} and "w" not in {row[0] for row in got}
+
+
+def test_suggest_tokens_commit_crash_replay_serves_rebuild(
+    spark, tmp_path, monkeypatch
+):
+    """A crash right after the first rename of the ``tokens/`` sink's
+    commit, then the replay of the same batch: the served table equals
+    build_suggest_index on the live names. The replay's suggest
+    recompute reads the token store's committed snapshot, so no entity
+    of a touched partition goes missing from the re-ranked
+    frequencies. (A crash before the token-store commit is
+    test_suggest_update_crash_between_sinks_recovers.)"""
+    from visual_asset_management_system_spark.operators.inverted_index import (
+        build_suggest_index,
+        suggest_index_update,
+    )
+
+    state = str(tmp_path / "s")
+    tokens_dir = os.path.join(state, "tokens")
+    schema = (
+        "database_id string, asset_id string, event_name string, "
+        "asset_name string"
+    )
+    names = {
+        f"a{i}": f"{('part', 'pane', 'park', 'pad')[i % 4]} item{i % 50}"
+        for i in range(400)
+    }
+
+    def run(rows, key):
+        suggest_index_update(
+            spark, state, spark.createDataFrame(rows, schema), key
+        )
+
+    run([("db", a, "INSERT", n) for a, n in names.items()], "b0")
+    change = {f"a{i}": f"pact item{i}" for i in (3, 101, 202, 303)}
+
+    real = os.replace
+    armed = {"on": True}
+
+    def crashing_replace(src, dst, *a, **k):
+        out = real(src, dst, *a, **k)
+        if armed["on"] and str(src).startswith(tokens_dir):
+            armed["on"] = False
+            raise RuntimeError("injected crash in the tokens/ commit")
+        return out
+
+    rows = [("db", a, "MODIFY", n) for a, n in change.items()]
+    with monkeypatch.context() as m:
+        m.setattr(os, "replace", crashing_replace)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            run(rows, "b1")
+    run(rows, "b1")  # the at-least-once replay
+
+    names.update(change)
+    live = spark.createDataFrame(
+        [("db", a, n) for a, n in names.items()],
+        "database_id string, asset_id string, asset_name string",
+    )
+    expected = {
+        tuple(r) for r in build_suggest_index(live, "asset_name").collect()
+    }
+    served = {
+        tuple(r)
+        for r in read_sink(spark, state + "/suggest")
+        .select("prefix", "suggestion", "freq", "rank")
+        .collect()
+    }
+    assert served == expected
 
 
 def test_percolate_stream_matches_batch_and_replays_idempotently(
@@ -2202,7 +2189,7 @@ def test_trending_stream_ranks_each_closed_window(spark, tmp_path):
 
     counts = {
         (r["window_start"].isoformat(), r["event_type"], r["n_events"])
-        for r in spark.read.parquet(sink + "/counts").collect()
+        for r in read_sink(spark, sink + "/counts").collect()
     }
     assert ("2024-01-01T10:00:00", "b", 3) in counts
     assert ("2024-01-01T11:00:00", "a", 4) in counts
@@ -2439,7 +2426,7 @@ def test_detect_sequences_exact_boundary_completes(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# manifest commit mode: immutable data dirs + atomic single-file publish
+# manifest commit: immutable data dirs + atomic single-file publish
 # ---------------------------------------------------------------------------
 
 _CDC_SCHEMA = (
@@ -2459,11 +2446,11 @@ def _sink_rows(spark, sink, mode):
     )
 
 
-@pytest.mark.parametrize("mode", ["rename", "manifest"])
+@pytest.mark.parametrize("mode", ["manifest"])
 def test_cdc_upsert_remove_both_commit_modes(spark, tmp_path, mode):
     """The merge semantics (upsert, idempotent re-upsert, REMOVE,
-    REMOVE-empties-partition) are identical under both commit modes —
-    only the publish protocol differs."""
+    REMOVE-empties-partition) through the manifest commit, read back
+    with ``read_sink(..., mode)`` as existing callers pass it."""
     sink = str(tmp_path / f"sink_{mode}")
     recompute = _recompute_factory(spark)
 
@@ -2474,7 +2461,7 @@ def test_cdc_upsert_remove_both_commit_modes(spark, tmp_path, mode):
         ],
         _CDC_SCHEMA,
     )
-    apply_cdc_batch(batch1, recompute, sink, commit_mode=mode)
+    apply_cdc_batch(batch1, recompute, sink)
     assert set(_sink_rows(spark, sink, mode)) == {"asset_1", "asset_2"}
 
     batch2 = spark.createDataFrame(
@@ -2485,7 +2472,7 @@ def test_cdc_upsert_remove_both_commit_modes(spark, tmp_path, mode):
         ],
         _CDC_SCHEMA,
     )
-    apply_cdc_batch(batch2, recompute, sink, commit_mode=mode)
+    apply_cdc_batch(batch2, recompute, sink)
     rows = _sink_rows(spark, sink, mode)
     assert set(rows) == {"asset_1", "asset_3"}
     assert rows["asset_1"] == "NAME 1"
@@ -2498,12 +2485,12 @@ def test_cdc_upsert_remove_both_commit_modes(spark, tmp_path, mode):
         ],
         _CDC_SCHEMA,
     )
-    apply_cdc_batch(batch3, recompute, sink, commit_mode=mode)
+    apply_cdc_batch(batch3, recompute, sink)
     assert _sink_rows(spark, sink, mode) == {}
 
 
 def test_manifest_merge_leaves_untouched_dirs_immutable(spark, tmp_path):
-    """Manifest mode never rewrites or renames a committed data dir: a
+    """The manifest commit never rewrites or renames a committed data dir: a
     merge touching one partition republishes ONLY that partition's
     manifest entry; every other entry still points at the original
     directory, byte-identical."""
@@ -2518,7 +2505,7 @@ def test_manifest_merge_leaves_untouched_dirs_immutable(spark, tmp_path):
         [(i, "INSERT", "assets", "db_1", f"asset_{i}", None, None) for i in range(20)],
         _CDC_SCHEMA,
     )
-    apply_cdc_batch(batch1, recompute, sink, commit_mode="manifest")
+    apply_cdc_batch(batch1, recompute, sink, )
     man_before = _load_manifest(sink)
     sig_before = {
         p: sorted(os.listdir(os.path.join(sink, rel)))
@@ -2528,7 +2515,7 @@ def test_manifest_merge_leaves_untouched_dirs_immutable(spark, tmp_path):
     batch2 = spark.createDataFrame(
         [(100, "MODIFY", "assets", "db_1", "asset_3", None, None)], _CDC_SCHEMA
     )
-    apply_cdc_batch(batch2, recompute, sink, commit_mode="manifest")
+    apply_cdc_batch(batch2, recompute, sink, )
     man_after = _load_manifest(sink)
 
     (touched,) = {
@@ -2560,7 +2547,7 @@ def test_manifest_crash_before_commit_keeps_old_snapshot(spark, tmp_path, monkey
     batch1 = spark.createDataFrame(
         [(1, "INSERT", "assets", "db_1", "asset_1", None, None)], _CDC_SCHEMA
     )
-    apply_cdc_batch(batch1, recompute, sink, commit_mode="manifest")
+    apply_cdc_batch(batch1, recompute, sink, )
     before = _sink_rows(spark, sink, "manifest")
 
     real_commit = cdc._commit_manifest
@@ -2573,7 +2560,7 @@ def test_manifest_crash_before_commit_keeps_old_snapshot(spark, tmp_path, monkey
         [(2, "INSERT", "assets", "db_1", "asset_2", None, None)], _CDC_SCHEMA
     )
     with pytest.raises(RuntimeError):
-        apply_cdc_batch(batch2, recompute, sink, commit_mode="manifest")
+        apply_cdc_batch(batch2, recompute, sink, )
 
     # reader still sees the OLD complete snapshot
     assert _sink_rows(spark, sink, "manifest") == before
@@ -2583,7 +2570,7 @@ def test_manifest_crash_before_commit_keeps_old_snapshot(spark, tmp_path, monkey
 
     # replay with the crash healed: correct final state, orphan removed
     monkeypatch.setattr(cdc, "_commit_manifest", real_commit)
-    apply_cdc_batch(batch2, recompute, sink, commit_mode="manifest")
+    apply_cdc_batch(batch2, recompute, sink, )
     assert set(_sink_rows(spark, sink, "manifest")) == {"asset_1", "asset_2"}
     from visual_asset_management_system_spark.streaming.cdc import _load_manifest
 
@@ -2609,7 +2596,7 @@ def test_manifest_reader_during_commit_sees_old_snapshot(spark, tmp_path, monkey
         ],
         _CDC_SCHEMA,
     )
-    apply_cdc_batch(batch1, recompute, sink, commit_mode="manifest")
+    apply_cdc_batch(batch1, recompute, sink, )
     before = _sink_rows(spark, sink, "manifest")
     assert set(before) == {"asset_1", "asset_2"}
 
@@ -2633,7 +2620,7 @@ def test_manifest_reader_during_commit_sees_old_snapshot(spark, tmp_path, monkey
         ],
         _CDC_SCHEMA,
     )
-    apply_cdc_batch(batch2, recompute, sink, commit_mode="manifest")
+    apply_cdc_batch(batch2, recompute, sink, )
 
     # mid-commit reader saw the OLD snapshot exactly, even though the
     # new version directory was already fully written beside it
@@ -2645,9 +2632,10 @@ def test_manifest_reader_during_commit_sees_old_snapshot(spark, tmp_path, monkey
 
 
 def test_manifest_compact_sink_rewrites_crowded_partitions(spark, tmp_path):
-    """compact_sink under manifest mode: crowded partitions are
-    rewritten into a fresh single-file version dir and repointed; the
-    content is unchanged and old dirs become vacuumable."""
+    """compact_sink (``commit_mode="manifest"`` as perfbench passes
+    it): crowded partitions are rewritten into a fresh single-file
+    version dir and repointed; the content is unchanged and old dirs
+    become vacuumable."""
     from visual_asset_management_system_spark.streaming.cdc import (
         _load_manifest,
         compact_sink,
@@ -2661,7 +2649,7 @@ def test_manifest_compact_sink_rewrites_crowded_partitions(spark, tmp_path):
             [(i, "INSERT", "assets", "db_1", f"asset_{i}", None, None)],
             _CDC_SCHEMA,
         )
-        apply_cdc_batch(b, recompute, sink, commit_mode="manifest")
+        apply_cdc_batch(b, recompute, sink, )
     before = _sink_rows(spark, sink, "manifest")
 
     compacted = compact_sink(
@@ -2677,11 +2665,27 @@ def test_manifest_compact_sink_rewrites_crowded_partitions(spark, tmp_path):
     assert _sink_rows(spark, sink, "manifest") == before
 
 
+def test_commit_mode_accepts_only_manifest(spark, tmp_path):
+    """``commit_mode`` remains only where existing callers pass it, and
+    names the one protocol: any other value is refused before any
+    sink is touched."""
+    from visual_asset_management_system_spark.streaming.cdc import compact_sink
+
+    sink = str(tmp_path / "sink")
+    with pytest.raises(ValueError, match="manifest"):
+        read_sink(spark, sink, "rename")
+    with pytest.raises(ValueError, match="manifest"):
+        compact_sink(spark, sink, commit_mode="rename")
+    with pytest.raises(ValueError, match="manifest"):
+        apply_routed_cdc_batch(spark.range(1), {}, {}, commit_mode="rename")
+    assert not os.path.exists(sink)
+
+
 def test_routed_null_path_expansion_manifest_mode(spark, tmp_path):
     """The NULL-path file-event expansion resolves the file sink through
     the manifest reader: a NULL-path MODIFY re-indexes the asset's known
-    files and a NULL-path REMOVE deletes them — same behavior the
-    rename-mode test pins, via the snapshot read."""
+    files and a NULL-path REMOVE deletes them (``commit_mode="manifest"``
+    passed as perfbench passes it)."""
     from visual_asset_management_system_spark.streaming.cdc import (
         ROUTED_CHANGE_LOG_SCHEMA,
         apply_routed_cdc_batch,
@@ -2795,6 +2799,94 @@ def test_trending_counts_store_prunes_and_compacts(spark, tmp_path):
     }
 
 
+def _assert_manifest_layout(sink: str) -> None:
+    """``sink`` was published by the manifest commit: a manifest, no
+    top-level partition directory, no swap sibling."""
+    assert os.path.isfile(os.path.join(sink, "_manifest.json")), sink
+    assert not [d for d in os.listdir(sink) if d.startswith("_part=")], sink
+    for sibling in (".trash", ".staging"):
+        assert not os.path.exists(sink.rstrip("/") + sibling), sibling
+
+
+def test_cdc_sinks_commit_through_the_manifest(spark, tmp_path):
+    """Every CDC merge sink, written with default arguments, holds the
+    manifest layout: the search tables (apply_cdc_batch,
+    apply_routed_cdc_batch), the suggest store's tokens/ and suggest/,
+    and the trending counts/."""
+    from visual_asset_management_system_spark.operators.inverted_index import (
+        suggest_index_update,
+    )
+    from visual_asset_management_system_spark.streaming.windows import (
+        start_trending_stream,
+    )
+
+    recompute = _recompute_factory(spark)
+    search = str(tmp_path / "search")
+    for rows in (
+        [(1, "INSERT", "assets", "db_1", "asset_1", None, None),
+         (2, "INSERT", "assets", "db_1", "asset_2", None, None)],
+        [(3, "MODIFY", "assets", "db_1", "asset_1", None, None),
+         (4, "REMOVE", "assets", "db_1", "asset_2", None, None)],
+    ):
+        apply_cdc_batch(spark.createDataFrame(rows, _CDC_SCHEMA), recompute, search)
+
+    files = spark.createDataFrame(
+        [("db_1", "asset_2", "/f/2.glb", 200)],
+        "database_id string, asset_id string, file_path string, file_size long",
+    )
+    routed = {"asset": str(tmp_path / "assets"), "file": str(tmp_path / "files")}
+    apply_routed_cdc_batch(
+        spark.createDataFrame(
+            [
+                _routed_row(1, "INSERT", "assets", "db_1", "asset_1"),
+                _routed_row(2, "INSERT", "s3", "db_1", "asset_2", "/f/2.glb"),
+            ],
+            ROUTED_CHANGE_LOG_SCHEMA,
+        ),
+        {
+            "asset": recompute,
+            "file": lambda keys: files.join(
+                keys, ["database_id", "asset_id", "file_path"], "left_semi"
+            ),
+        },
+        routed,
+    )
+
+    state = str(tmp_path / "suggest_state")
+    schema = (
+        "database_id string, asset_id string, event_name string, "
+        "asset_name string"
+    )
+    for key, rows in (
+        ("b0", [("db", "a1", "INSERT", "red widget")]),
+        ("b1", [("db", "a1", "MODIFY", "red rocket")]),
+    ):
+        suggest_index_update(spark, state, spark.createDataFrame(rows, schema), key)
+
+    src = str(tmp_path / "events")
+    trend = str(tmp_path / "trend")
+    for rows in (
+        [_ev(1, 1, "a", 1.0, "2024-01-01T10:05:00Z"),
+         _ev(2, 1, "a", 1.0, "2024-01-01T11:40:00Z")],
+        [_ev(3, 1, "a", 1.0, "2024-01-01T12:40:00Z")],
+    ):
+        _write_events(src, rows)
+        start_trending_stream(
+            spark, src, trend, str(tmp_path / "trend_ckpt"), window="1 hour"
+        ).awaitTermination(120)
+
+    for sink in (
+        search,
+        routed["asset"],
+        routed["file"],
+        os.path.join(state, "tokens"),
+        os.path.join(state, "suggest"),
+        os.path.join(trend, "counts"),
+    ):
+        _assert_manifest_layout(sink)
+        assert read_sink(spark, sink) is not None, sink
+
+
 def test_sessionize_emits_open_session_on_watermark_expiry(spark, tmp_path):
     """Session-closing TTL: a user who goes silent has their trailing
     open session EMITTED (as closed — the gap has provably passed once
@@ -2847,9 +2939,9 @@ def test_sessionize_emits_open_session_on_watermark_expiry(spark, tmp_path):
     assert users == {9}
 
 
-@pytest.mark.parametrize("mode", ["rename", "manifest"])
+@pytest.mark.parametrize("mode", ["manifest"])
 def test_cdc_merge_randomized_against_dict_model(spark, tmp_path, mode):
-    """Model-based check of the merge under both commit modes: a seeded
+    """Model-based check of the merge and its manifest commit: a seeded
     random sequence of INSERT/MODIFY/REMOVE batches over a small key
     space must leave the sink exactly equal to a driver-side dict model
     (last-writer-wins upsert, REMOVE deletes) after EVERY batch — the
@@ -2857,7 +2949,7 @@ def test_cdc_merge_randomized_against_dict_model(spark, tmp_path, mode):
     semantics level."""
     import random
 
-    rng = random.Random(77 if mode == "rename" else 78)
+    rng = random.Random(78)
     sink = str(tmp_path / f"model_sink_{mode}")
     recompute = _recompute_factory(spark)
 
@@ -2884,7 +2976,7 @@ def test_cdc_merge_randomized_against_dict_model(spark, tmp_path, mode):
                 model.pop(a, None)
             else:
                 model[a] = f"NAME {a.split('_')[1]}"
-        apply_cdc_batch(batch, recompute, sink, commit_mode=mode)
+        apply_cdc_batch(batch, recompute, sink)
         assert _sink_rows(spark, sink, mode) == model
 
 

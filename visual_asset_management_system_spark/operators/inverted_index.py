@@ -464,10 +464,11 @@ def suggest_index_update(
     State under ``state_dir``:
 
     - ``tokens/``  — (keys..., token, cnt): each live entity's token
-      counts, merged by the crash-safe partition-rewrite
-      (streaming.cdc.apply_cdc_batch);
+      counts, a CDC merge sink (streaming.cdc.apply_cdc_batch: touched
+      partitions rewritten, published by one manifest commit);
     - ``suggest/`` — (prefix, suggestion, freq, rank): the serving
-      table, partition-rewritten on the PREFIX key;
+      table, a CDC merge sink keyed on the PREFIX — read it with
+      streaming.cdc.read_sink;
     - ``manifests/batch=<key>/`` — the batch's affected-prefix set.
 
     Only prefixes of tokens touched by the batch (old tokens of the
@@ -490,7 +491,7 @@ def suggest_index_update(
 
     from pyspark.sql import Window
 
-    from ..streaming.cdc import apply_cdc_batch
+    from ..streaming.cdc import apply_cdc_batch, read_sink
 
     key_cols = list(key_cols)
     tokens_dir = os.path.join(state_dir, "tokens")
@@ -513,10 +514,10 @@ def suggest_index_update(
     store_schema = (
         ", ".join(f"{c} string" for c in key_cols) + ", token string, cnt bigint"
     )
-    if os.path.isdir(tokens_dir):
-        store = spark.read.parquet(tokens_dir).select(
-            *key_cols, "token", "cnt"
-        )
+    # the committed snapshot: a crashed tokens/ merge never shows here
+    store = read_sink(spark, tokens_dir)
+    if store is not None:
+        store = store.select(*key_cols, "token", "cnt")
     else:
         store = spark.createDataFrame([], store_schema)
 

@@ -12,9 +12,11 @@ directory name, its schema and its merge function.
 
 **Tagged append.** :func:`append` writes a batch's rows with a
 ``batch_key`` string column holding the batch's key (the stream
-wrappers use ``b<micro-batch id>``). The gram store named this column
-``batch_tag`` before it moved onto this module; its stores are built
-afresh from their inputs, so nothing reads the old name.
+wrappers use ``b<micro-batch id>``). It first clears the relation's
+``_temporary``, where a crashed append leaves its committed task
+output for the next job commit to promote. The gram store named this
+column ``batch_tag`` before it moved onto this module; its stores are
+built afresh from their inputs, so nothing reads the old name.
 
 **Replay-excluding read.** Delivery is at-least-once: a batch that
 crashed after appending is replayed under the same key. :func:`read`
@@ -82,8 +84,12 @@ def append(
     batch_key: str | None,
     partition_col: str | None = None,
 ) -> None:
-    """Append ``df`` to ``live`` with every row tagged ``batch_key``."""
+    """Append ``df`` to ``live`` with every row tagged ``batch_key``.
+    A crashed append's committed task output under ``_temporary`` is
+    cleared first: the file committer would otherwise promote it with
+    this batch, whatever batch it belonged to (single writer)."""
     recover_dir(live)
+    shutil.rmtree(os.path.join(live, "_temporary"), ignore_errors=True)
     writer = df.withColumn(TAG, F.lit(batch_key).cast("string")).write.mode(
         "append"
     )

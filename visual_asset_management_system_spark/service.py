@@ -160,10 +160,11 @@ class CatalogService:
     def suggest(self, prefix: str, entity: str = "asset") -> DataFrame:
         """Type-ahead suggestions for one prefix — a point lookup. When
         the tables dict carries a CDC-maintained ``suggest`` table
-        (suggest_index_update's sink), serve from it — the prefix
-        filter prunes to one hash partition; otherwise compute that one
-        prefix's rows over live entity names (the rows the full index
-        build would hold for it, without building it)."""
+        (suggest_index_update's ``suggest/`` sink, loaded with
+        ``streaming.cdc.read_sink`` — the sink's committed snapshot),
+        serve from it; otherwise compute that one prefix's rows over
+        live entity names (the rows the full index build would hold
+        for it, without building it)."""
         from .operators.inverted_index import suggest_for_prefix
 
         prefix = prefix.lower()

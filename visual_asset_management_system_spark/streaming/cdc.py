@@ -22,35 +22,28 @@ Identical code does the full rebuild (crReindexer equivalent): the
 batch builders in operators.search_tables ARE the recompute step; this
 module adds the merge sink and the stream wrapper. With a Delta runtime
 the merge becomes ``MERGE INTO``; on plain parquet the merge rewrites
-ONLY the hash-partition directories whose keys appear in the batch —
-work per micro-batch is O(touched partitions), never O(table). The
-per-directory swap is the non-transactional analog of dynamic partition
-overwrite; a crash mid-swap leaves other partitions intact and the
-at-least-once replay + idempotent recompute repairs the touched one.
+ONLY the hash partitions whose keys appear in the batch — work per
+micro-batch is O(touched partitions), never O(table).
 
-TWO COMMIT MODES, one merge plan (``commit_mode`` on every entry
-point; everything above the sink — routing, affected-key recompute,
-the merge plan itself — is storage-agnostic DataFrame code shared by
-both):
-
-- ``"rename"`` (local fast path): touched ``_part=`` directories are
-  swapped in place via POSIX rename pairs with a ``.trash`` aside +
-  recovery sweep. Atomic and cheap on a real filesystem; NOT safe on
-  S3-class object stores, where rename is copy+delete.
-- ``"manifest"`` (object-store path, the same protocol lakehouse
-  formats use): data directories are IMMUTABLE — each merge writes its
-  touched partitions to a fresh ``data/<version>/`` directory and then
-  atomically publishes a single small ``_manifest.json`` (one-file
-  rename locally ≙ one PUT on S3) mapping partition id → current data
-  directory. Readers resolve the manifest; at every instant they see
-  either the old or the new complete snapshot, never a mix — no rename
-  of data, no trash, no crash window. A crash before the manifest
-  commit leaves only unreferenced orphan directories, removed by the
-  vacuum sweep at the start of the next merge (production: with a
-  retention grace so in-flight readers of recent snapshots finish).
-  On a Delta/Iceberg runtime this whole mode collapses into
-  ``MERGE INTO`` + the format's own log commit, and ``compact_sink``
-  into OPTIMIZE / rewrite-data-files.
+ONE COMMIT PROTOCOL, the one lakehouse formats use and the only one
+safe on S3-class object stores (where rename is copy+delete): data
+directories are IMMUTABLE. Each merge writes its touched partitions to
+a fresh ``data/<version>/`` directory, then atomically publishes a
+single small ``_manifest.json`` (one-file rename locally ≙ one PUT on
+S3) mapping partition id → current data directory. Readers resolve
+the manifest (:func:`read_sink`); at every instant they see either the
+old or the new complete snapshot, never a mix — no rename of data, no
+crash window. A crash before the manifest commit leaves only
+unreferenced orphan directories, removed by the vacuum sweep at the
+start of the next merge (production: with a retention grace so
+in-flight readers of recent snapshots finish); the at-least-once
+replay then rewrites the same partitions from the same snapshot. On a
+Delta/Iceberg runtime the merge collapses into ``MERGE INTO`` + the
+format's own log commit, and ``compact_sink`` into OPTIMIZE /
+rewrite-data-files. Every CDC-maintained sink in the package commits
+this way: the search tables, the suggest store's ``tokens/`` and
+``suggest/`` (operators/inverted_index.py) and the trending ``counts/``
+(streaming/windows.py).
 """
 
 from __future__ import annotations
@@ -92,12 +85,24 @@ def _partition_of(df: DataFrame, key_cols: list[str]) -> DataFrame:
     )
 
 
+MANIFEST_NAME = "_manifest.json"
+
+
+def _require_manifest(mode: str) -> None:
+    """``commit_mode`` survives only on the entry points existing callers
+    pass it to, and names the one protocol there is."""
+    if mode != "manifest":
+        raise ValueError(
+            f"commit_mode={mode!r}: CDC sinks commit only through the "
+            "manifest protocol ('manifest')"
+        )
+
+
 def apply_cdc_batch(
     batch: DataFrame,
     recompute,
     sink_dir: str,
     key_cols: list[str] = ("database_id", "asset_id"),
-    commit_mode: str = "rename",
 ) -> None:
     """One micro-batch upsert: recompute changed rows, merge into sink.
 
@@ -106,125 +111,52 @@ def apply_cdc_batch(
     restricted by semi-join). REMOVE events drop their rows.
 
     Partial rewrite: only the hash partitions whose keys appear in the
-    batch are read, merged, and republished; untouched partitions are
-    never opened. The ``collect()`` of touched partition ids is bounded
-    by N_SINK_PARTITIONS (≤32 rows). ``commit_mode`` picks how the
-    merged partitions become visible: ``"rename"`` (POSIX directory
-    swap, local fast path) or ``"manifest"`` (immutable data dirs + an
-    atomically-published manifest — the object-store-safe protocol; see
-    module docstring).
-    """
+    batch are read, merged and written to an immutable
+    ``data/<version>/`` directory; untouched partitions are never
+    opened. The ``collect()`` of touched partition ids is bounded by
+    N_SINK_PARTITIONS (≤32 rows). The new snapshot becomes visible in
+    one manifest commit; until then readers resolve the previous
+    complete snapshot, and a replay of the batch writes a new version
+    with identical content — idempotent by construction. A touched
+    partition whose merged row set is empty drops out of the manifest
+    (the REMOVE-empties-partition case)."""
     spark = batch.sparkSession
+    key_cols = list(key_cols)
     keys = batch.select(*key_cols).distinct()
     removes = (
         batch.filter(F.col("event_name") == "REMOVE").select(*key_cols).distinct()
     )
     fresh = _partition_of(
-        recompute(keys).join(removes, list(key_cols), "left_anti"), list(key_cols)
+        recompute(keys).join(removes, key_cols, "left_anti"), key_cols
     )
 
-    if commit_mode == "manifest":
-        _apply_manifest_merge(spark, keys, fresh, sink_dir, list(key_cols))
-        return
-
-    # recover BEFORE the fresh-sink check: a crash can leave the sink's
-    # only _part directory in .trash with the live dir missing — without
-    # recovery first, an empty-looking sink would be fully overwritten
-    # (surviving rows never restored) and the stale trash could later
-    # resurrect an outdated partition
-    _recover_and_sweep_trash(sink_dir)
-
-    if not os.path.isdir(sink_dir) or not os.listdir(sink_dir):
-        fresh.write.partitionBy("_part").mode("overwrite").parquet(sink_dir)
-        return
-
+    man = _load_manifest(sink_dir)
+    _vacuum_unreferenced(sink_dir, man)
     touched = sorted(
         r["_part"]
-        for r in _partition_of(keys, list(key_cols)).select("_part").distinct().collect()
+        for r in _partition_of(keys, key_cols).select("_part").distinct().collect()
     )
-    existing_touched = spark.read.parquet(sink_dir).filter(
-        F.col("_part").isin(touched)
-    )
-    # merged = surviving old rows of touched partitions + fresh rows;
-    # fresh keys hash into touched partitions by construction.
-    merged = existing_touched.join(keys, list(key_cols), "left_anti").unionByName(
-        fresh
-    )
-
-    staging = sink_dir.rstrip("/") + ".staging"
-    merged.write.partitionBy("_part").mode("overwrite").parquet(staging)
-    try:
-        for p in touched:
-            _swap_partition_dir(staging, sink_dir, p)
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-
-
-def _recover_and_sweep_trash(sink_dir: str) -> list[int]:
-    """Recover from, then clear, the swap's ``.trash`` sibling.
-
-    A crash between ``_swap_partition_dir``'s two renames leaves a
-    partition's only copy in the trash with its live directory missing;
-    a crash after promotion leaves a stale aside. Run at the start of
-    every merge/compaction: asides whose live ``_part=`` directory is
-    missing are restored (the in-window crash — without this, the
-    at-least-once replay would read the sink WITHOUT the partition's
-    surviving rows and silently drop them), everything else is swept,
-    so trash never accumulates across batches (previously a stale aside
-    for a partition never touched again leaked forever). Returns the
-    restored partition ids."""
-    trash = sink_dir.rstrip("/") + ".trash"
-    if not os.path.isdir(trash):
-        return []
-    restored = []
-    for d in sorted(os.listdir(trash)):
-        if not d.startswith("_part="):
-            continue
-        dst = os.path.join(sink_dir, d)
-        if not os.path.isdir(dst):
-            os.makedirs(sink_dir, exist_ok=True)
-            os.replace(os.path.join(trash, d), dst)
-            restored.append(int(d.split("=", 1)[1]))
-    shutil.rmtree(trash, ignore_errors=True)
-    return restored
-
-
-def _swap_partition_dir(staging: str, sink_dir: str, p: int) -> None:
-    """Crash-resilient partition swap: the live directory moves ASIDE
-    (to a ``.trash`` sibling OUTSIDE the sink, so partition discovery
-    never sees it) before the staged one is promoted — at no instant has
-    the only copy of surviving rows been deleted, which a
-    rmtree-then-rename swap cannot guarantee (untouched keys of the
-    partition would be unrecoverable: their events were not in the
-    batch, so at-least-once replay cannot rebuild them). A crash between
-    the two renames leaves the partition in the trash, and
-    ``_recover_and_sweep_trash`` restores it automatically at the start
-    of the replayed merge; plain parquet cannot make the pair atomic —
-    a lakehouse table format (MERGE) is the transactional deployment
-    path."""
-    src = os.path.join(staging, f"_part={p}")
-    dst = os.path.join(sink_dir, f"_part={p}")
-    trash = sink_dir.rstrip("/") + ".trash"
-    os.makedirs(trash, exist_ok=True)
-    aside = os.path.join(trash, f"_part={p}")
-    shutil.rmtree(aside, ignore_errors=True)  # stale from a prior crash
-    if os.path.isdir(dst):
-        os.replace(dst, aside)
-    if os.path.isdir(src):
-        os.replace(src, dst)
-    # else: every row of partition p was deleted → dir stays gone
-    shutil.rmtree(aside, ignore_errors=True)
-    try:  # leave no empty trash sibling behind when this was the last aside
-        os.rmdir(trash)
-    except OSError:
-        pass
-
-
-# ---------------------------------------------------------------------------
-# manifest commit mode: immutable data dirs + atomic single-file publish
-# ---------------------------------------------------------------------------
-
-MANIFEST_NAME = "_manifest.json"
+    merged = fresh
+    old = read_sink(spark, sink_dir, parts=touched)
+    if old is not None:
+        # surviving old rows of touched partitions + fresh rows; fresh
+        # keys hash into touched partitions by construction
+        surviving = _partition_of(
+            old.join(keys, key_cols, "left_anti"), key_cols
+        )
+        merged = surviving.unionByName(fresh)
+    version = uuid.uuid4().hex[:12]
+    vdir = os.path.join(sink_dir, "data", version)
+    merged.write.partitionBy("_part").mode("overwrite").parquet(vdir)
+    written = {
+        int(d.split("=", 1)[1])
+        for d in os.listdir(vdir)
+        if d.startswith("_part=")
+    }
+    new_man = {p: v for p, v in man.items() if p not in touched}
+    for p in sorted(written):
+        new_man[p] = f"data/{version}/_part={p}"
+    _commit_manifest(sink_dir, new_man)
 
 
 def _load_manifest(sink_dir: str) -> dict[int, str]:
@@ -282,24 +214,16 @@ def _vacuum_unreferenced(sink_dir: str, parts: dict[int, str]) -> None:
 def read_sink(
     spark: SparkSession,
     sink_dir: str,
-    commit_mode: str = "rename",
+    commit_mode: str = "manifest",
     parts: list[int] | None = None,
 ) -> DataFrame | None:
-    """Read the sink's current snapshot under either commit mode,
-    optionally restricted to a set of partition ids (manifest mode
-    prunes unlisted directories without opening them — the manifest IS
-    the partition index). Returns None when the sink is empty. Manifest
-    mode yields the data columns only (``_part`` is directory metadata;
-    recompute it from the keys via ``_partition_of`` when needed)."""
-    if commit_mode == "rename":
-        # emptiness = no partition dirs left (a _SUCCESS marker from the
-        # initial full write may survive after every row is removed)
-        if not os.path.isdir(sink_dir) or not any(
-            d.startswith("_part=") for d in os.listdir(sink_dir)
-        ):
-            return None
-        df = spark.read.parquet(sink_dir)
-        return df.filter(F.col("_part").isin(parts)) if parts is not None else df
+    """Read the sink's current snapshot, optionally restricted to a set
+    of partition ids (unlisted directories are pruned without being
+    opened — the manifest IS the partition index). Returns None when
+    the sink is empty. Yields the data columns only (``_part`` is
+    directory metadata; recompute it from the keys via
+    ``_partition_of`` when needed)."""
+    _require_manifest(commit_mode)
     man = _load_manifest(sink_dir)
     sel = [v for p, v in sorted(man.items()) if parts is None or p in parts]
     if not sel:
@@ -307,129 +231,54 @@ def read_sink(
     return spark.read.parquet(*[os.path.join(sink_dir, v) for v in sel])
 
 
-def _apply_manifest_merge(
-    spark: SparkSession,
-    keys: DataFrame,
-    fresh: DataFrame,
-    sink_dir: str,
-    key_cols: list[str],
-) -> None:
-    """Manifest-mode merge: write the merged touched partitions to an
-    immutable ``data/<version>/`` directory, then flip the manifest.
-
-    No crash window: until ``_commit_manifest`` succeeds, readers
-    resolve the previous manifest to the previous (complete) snapshot;
-    a crash mid-write leaves only an unreferenced version directory for
-    the next vacuum. Replay of an at-least-once batch writes a new
-    version with identical content and re-commits — idempotent by
-    construction. A touched partition whose merged row set is empty
-    simply drops out of the manifest (the REMOVE-empties-partition
-    case)."""
-    man = _load_manifest(sink_dir)
-    _vacuum_unreferenced(sink_dir, man)
-    touched = sorted(
-        r["_part"]
-        for r in _partition_of(keys, key_cols).select("_part").distinct().collect()
-    )
-    merged = fresh
-    old = read_sink(spark, sink_dir, "manifest", parts=touched)
-    if old is not None:
-        surviving = _partition_of(
-            old.join(keys, key_cols, "left_anti"), key_cols
-        )
-        merged = surviving.unionByName(fresh)
-    version = uuid.uuid4().hex[:12]
-    vdir = os.path.join(sink_dir, "data", version)
-    merged.write.partitionBy("_part").mode("overwrite").parquet(vdir)
-    written = {
-        int(d.split("=", 1)[1])
-        for d in os.listdir(vdir)
-        if d.startswith("_part=")
-    }
-    new_man = {p: v for p, v in man.items() if p not in touched}
-    for p in sorted(written):
-        new_man[p] = f"data/{version}/_part={p}"
-    _commit_manifest(sink_dir, new_man)
-
-
 def compact_sink(
     spark: SparkSession,
     sink_dir: str,
     max_files_per_partition: int = 4,
-    commit_mode: str = "rename",
+    commit_mode: str = "manifest",
 ) -> list[int]:
     """Small-file compaction for the CDC sink — the OPTIMIZE half of the
     partial-rewrite story: every micro-batch rewrite adds files to its
-    touched ``_part`` directories, and read amplification grows with
-    file count. Rewrites ONLY the partitions whose file count exceeds
-    the threshold (each coalesced to one file via the same staged-swap
-    the merge uses), leaving compact partitions untouched. Returns the
-    compacted partition ids.
+    touched partitions, and read amplification grows with file count.
+    Rewrites ONLY the partitions whose file count exceeds the threshold,
+    each coalesced to one file in a fresh immutable version directory
+    published by one manifest commit; compact partitions keep their
+    directories. Returns the compacted partition ids.
 
     On a lakehouse runtime this is ``OPTIMIZE``/rewrite-data-files; on
     plain parquet it is a maintenance job scheduled off the write path.
     """
-    if commit_mode == "manifest":
-        man = _load_manifest(sink_dir)
-        _vacuum_unreferenced(sink_dir, man)
+    _require_manifest(commit_mode)
+    man = _load_manifest(sink_dir)
+    _vacuum_unreferenced(sink_dir, man)
 
-        def n_files(rel: str) -> int:
-            d = os.path.join(sink_dir, rel)
-            return sum(1 for f in os.listdir(d) if f.endswith(".parquet"))
+    def n_files(rel: str) -> int:
+        d = os.path.join(sink_dir, rel)
+        return sum(1 for f in os.listdir(d) if f.endswith(".parquet"))
 
-        crowded = sorted(
-            p for p, rel in man.items() if n_files(rel) > max_files_per_partition
-        )
-        if not crowded:
-            return []
-        # one job: per-directory reads re-tagged with their partition id
-        # (the immutable dirs don't carry _part inside the files)
-        rows = None
-        for p in crowded:
-            part = spark.read.parquet(
-                os.path.join(sink_dir, man[p])
-            ).withColumn("_part", F.lit(p))
-            rows = part if rows is None else rows.unionByName(part)
-        version = uuid.uuid4().hex[:12]
-        vdir = os.path.join(sink_dir, "data", version)
-        rows.repartition("_part").write.partitionBy("_part").mode(
-            "overwrite"
-        ).parquet(vdir)
-        new_man = dict(man)
-        for p in crowded:
-            new_man[p] = f"data/{version}/_part={p}"
-        _commit_manifest(sink_dir, new_man)
-        return crowded
-
-    # Recovery FIRST: a crash between the swap's renames can leave a
-    # partition's only copy in the .trash sibling while the live sink
-    # dir itself is absent — an early return on isdir would skip it.
-    _recover_and_sweep_trash(sink_dir)
-    if not os.path.isdir(sink_dir):
-        return []
-    crowded = []
-    for d in os.listdir(sink_dir):
-        if not d.startswith("_part="):
-            continue
-        files = [
-            f for f in os.listdir(os.path.join(sink_dir, d))
-            if f.endswith(".parquet")
-        ]
-        if len(files) > max_files_per_partition:
-            crowded.append(int(d.split("=", 1)[1]))
+    crowded = sorted(
+        p for p, rel in man.items() if n_files(rel) > max_files_per_partition
+    )
     if not crowded:
         return []
-    rows = spark.read.parquet(sink_dir).filter(F.col("_part").isin(crowded))
-    staging = sink_dir.rstrip("/") + ".compact"
+    # one job: per-directory reads re-tagged with their partition id
+    # (the immutable dirs don't carry _part inside the files)
+    rows = None
+    for p in crowded:
+        part = spark.read.parquet(
+            os.path.join(sink_dir, man[p])
+        ).withColumn("_part", F.lit(p))
+        rows = part if rows is None else rows.unionByName(part)
+    version = uuid.uuid4().hex[:12]
+    vdir = os.path.join(sink_dir, "data", version)
     rows.repartition("_part").write.partitionBy("_part").mode(
         "overwrite"
-    ).parquet(staging)
-    try:
-        for p in crowded:
-            _swap_partition_dir(staging, sink_dir, p)
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-    return sorted(crowded)
+    ).parquet(vdir)
+    new_man = dict(man)
+    for p in crowded:
+        new_man[p] = f"data/{version}/_part={p}"
+    _commit_manifest(sink_dir, new_man)
+    return crowded
 
 
 def compact_batch_sink(
@@ -441,8 +290,9 @@ def compact_batch_sink(
     """Small-file compaction for overwrite-by-batch notification sinks
     (the percolate stream layout — each micro-batch owns a
     ``batch=<id>`` directory it idempotently overwrites on replay).
-    Every crowded batch directory coalesces to one file via the same
-    staged aside-then-promote swap as the CDC merge.
+    Every crowded batch directory coalesces to one file via a staged
+    aside-then-promote swap. This sink is not a CDC merge sink: it has
+    no manifest, and a batch directory is only ever overwritten whole.
 
     Batch directory BOUNDARIES are preserved: merging across batches
     would break the sink's replay contract — an at-least-once
@@ -589,7 +439,6 @@ def _expand_null_path_file_events(
     sub: DataFrame,
     sink_dir: str,
     file_keys_of_assets=None,
-    commit_mode: str = "rename",
 ) -> DataFrame:
     """Expand file-target events with NULL file_path to explicit file
     keys at the asset grain.
@@ -619,7 +468,7 @@ def _expand_null_path_file_events(
     asset_keys = flags.select("database_id", "asset_id")
     key3 = ["database_id", "asset_id", "file_path"]
     expanded: DataFrame | None = None
-    sink = read_sink(spark, sink_dir, commit_mode)
+    sink = read_sink(spark, sink_dir)
     if sink is not None:
         expanded = sink.select(*key3).join(
             F.broadcast(asset_keys), ["database_id", "asset_id"], "left_semi"
@@ -648,7 +497,7 @@ def apply_routed_cdc_batch(
     recomputes: dict[str, object],
     sink_dirs: dict[str, str],
     file_keys_of_assets=None,
-    commit_mode: str = "rename",
+    commit_mode: str = "manifest",
 ) -> None:
     """Routed micro-batch: dispatch events per target index, then run the
     partial-rewrite merge per target. ``recomputes``/``sink_dirs`` map
@@ -659,8 +508,11 @@ def apply_routed_cdc_batch(
     the asset's known file keys (see ``_expand_null_path_file_events``);
     ``file_keys_of_assets`` optionally supplies the source-of-truth
     file listing for an asset-key set so the expansion also reaches
-    files the sink has never indexed.
+    files the sink has never indexed. The expansion reads the file
+    sink's committed snapshot, which a crashed merge never leaves
+    partial.
     """
+    _require_manifest(commit_mode)
     routed = route_changes(batch)
     for target, key_cols in (
         ("asset", ["database_id", "asset_id"]),
@@ -670,23 +522,12 @@ def apply_routed_cdc_batch(
             continue
         sub = routed.filter(F.col("target") == target)
         if target == "file":
-            # recover before the expansion CAPTURES the sink's file-key
-            # listing: after an in-window crash, a replayed NULL-path
-            # event's expansion must see the file keys of the
-            # still-trashed partition, or those files are never
-            # re-indexed/deleted and stale index rows survive silently
-            # (manifest mode has no such window — readers always resolve
-            # a complete committed snapshot)
-            if commit_mode == "rename":
-                _recover_and_sweep_trash(sink_dirs[target])
             sub = _expand_null_path_file_events(
-                sub, sink_dirs[target], file_keys_of_assets, commit_mode
+                sub, sink_dirs[target], file_keys_of_assets
             )
         if sub.isEmpty():
             continue
-        apply_cdc_batch(
-            sub, recomputes[target], sink_dirs[target], key_cols, commit_mode
-        )
+        apply_cdc_batch(sub, recomputes[target], sink_dirs[target], key_cols)
 
 
 def start_search_table_stream(
@@ -696,7 +537,6 @@ def start_search_table_stream(
     recompute,
     checkpoint_dir: str,
     key_cols: list[str] = ("database_id", "asset_id"),
-    commit_mode: str = "rename",
 ):
     """Structured Streaming wrapper: file-source change log → per-batch
     merge. Each run drains the available change log and stops
@@ -708,7 +548,7 @@ def start_search_table_stream(
     )
 
     def step(batch: DataFrame, _batch_id: int) -> None:
-        apply_cdc_batch(batch, recompute, sink_dir, key_cols, commit_mode)
+        apply_cdc_batch(batch, recompute, sink_dir, key_cols)
 
     return run_micro_batches(stream, checkpoint_dir, step)
 
@@ -719,7 +559,6 @@ def start_routed_stream(
     sink_dirs: dict[str, str],
     recomputes: dict[str, object],
     checkpoint_dir: str,
-    commit_mode: str = "rename",
 ):
     """Routed variant: one change-log stream feeding BOTH search tables
     through route_changes (the full assetIndexer/fileIndexer dispatch)."""
@@ -730,8 +569,6 @@ def start_routed_stream(
     )
 
     def step(batch: DataFrame, _batch_id: int) -> None:
-        apply_routed_cdc_batch(
-            batch, recomputes, sink_dirs, commit_mode=commit_mode
-        )
+        apply_routed_cdc_batch(batch, recomputes, sink_dirs)
 
     return run_micro_batches(stream, checkpoint_dir, step)

@@ -17,9 +17,10 @@ live → ``<live>.old`` aside, replacement → live — so at no instant is
 the only complete copy deleted. A crash between the renames leaves the
 store complete but in the aside; :func:`recover_dir`, run before every
 store read or rewrite, moves it back before anything can observe an
-empty store. Plain POSIX renames cannot make the pair atomic; on an
-object store use the manifest-commit pattern (streaming/cdc.py)
-instead. Single writer per store.
+empty store. Plain POSIX renames cannot make the pair atomic; the
+CDC merge sinks (streaming/cdc.py) therefore use no swap at all —
+they publish immutable data directories through one atomic manifest
+commit, the pattern an object store needs. Single writer per store.
 """
 
 from __future__ import annotations
