@@ -774,7 +774,7 @@ def _sq8_crossover(spark, tmp_base: str) -> dict:
     regime was an extrapolation. Sweep vector width and row count on
     synthetic hash-derived embeddings (JVM-generated, no fixture
     dependency), and measure the MAINTAINED store's probe pair at the
-    largest config — the deployment shape the r14 sidecar exists for.
+    largest config — the deployment shape its SQ8 codes exist for.
     Records per config: relation bytes (full vs quantized), exact vs
     quantized wall, top-10 equality. The honest outcome stands either
     way: a measured crossover point, or an explicit negative result."""
@@ -782,9 +782,11 @@ def _sq8_crossover(spark, tmp_base: str) -> dict:
     import shutil as _shutil
     import subprocess
 
+    import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
     from visual_asset_management_system_spark.operators.similarity import (
+        _ann_meta,
         ann_index_update,
         ann_store_topk,
         ann_store_topk_quantized,
@@ -799,6 +801,24 @@ def _sq8_crossover(spark, tmp_base: str) -> dict:
             ["du", "-sb", path], capture_output=True, text=True
         ).stdout
         return int(out.split()[0]) if out else 0
+
+    def chunk_bytes(path: str, cols: set) -> int:
+        """Compressed bytes of the named columns' chunks, summed over
+        the parquet footers under ``path`` — what a scan projecting
+        those columns reads."""
+        total = 0
+        for root, _dirs, files in os.walk(path):
+            for f in files:
+                if not f.endswith(".parquet"):
+                    continue
+                md = pq.ParquetFile(os.path.join(root, f)).metadata
+                for g in range(md.num_row_groups):
+                    rg = md.row_group(g)
+                    for c in range(rg.num_columns):
+                        col = rg.column(c)
+                        if col.path_in_schema.split(".")[0] in cols:
+                            total += col.total_compressed_size
+        return total
 
     def gen(dim: int, rows: int, dense: bool):
         # two corpus families, because parquet encoding IS the
@@ -878,13 +898,18 @@ def _sq8_crossover(spark, tmp_base: str) -> dict:
         print(f"  sq8 {key}: {out['configs'][key]}", flush=True)
 
     # the maintained store's probe pair at the largest config — the
-    # sidecar's deployment shape: nprobe of n_lists, so the first pass
+    # store's deployment shape: nprobe of n_lists, so the first pass
     # is probed-lists-sized on both sides
     dim, rows, _dense = configs[-1]
     key = f"dense_dim{dim}_rows{rows // 1000}k"
     store = os.path.join(tmp_base, f"store_{key}")
     full_dir = os.path.join(tmp_base, key, "full")
-    if not os.path.isdir(os.path.join(store, "vectors")):
+    try:
+        _ann_meta(store, "read")
+        cached = True
+    except ValueError:  # absent, or an earlier layout: rebuild
+        cached = False
+    if not cached:
         _shutil.rmtree(store, ignore_errors=True)
         src = spark.read.parquet(full_dir)
         for b in range(4):
@@ -918,7 +943,10 @@ def _sq8_crossover(spark, tmp_base: str) -> dict:
         "n_lists": 16,
         "nprobe": 4,
         "vectors_bytes": du(os.path.join(store, "vectors")),
-        "q8_bytes": du(os.path.join(store, "q8")),
+        # the SQ8 codes live in the vectors files: their column chunks
+        "q8_bytes": chunk_bytes(
+            os.path.join(store, "vectors"), {"q8", "q_scale", "nrm"}
+        ),
         "exact_sec": st_exact,
         "quantized_sec": st_quant,
         "speedup": round(st_exact / st_quant, 3) if st_quant else None,

@@ -168,7 +168,7 @@ _STORES = {
         ),
         lambda s, d: _rows(similarity.ann_store_read(s, d)),
         ["vectors"],
-        ["keys", "q8"],
+        ["keys"],
     ),
 }
 
@@ -209,7 +209,6 @@ def test_first_append_crash_reads_empty_and_replays(spark, tmp_path, name):
         with open(meta_path) as f:
             meta = json.load(f)
         meta.pop("keys_seq")
-        meta.pop("q8_seq")
         with open(meta_path, "w") as f:
             json.dump(meta, f)
     # the same store had the crashed append never started
@@ -330,8 +329,7 @@ _COMPACTIONS = {
     "ann": (
         _STORES["ann"][0],
         lambda s, d: similarity.compact_ann_store(s, d),
-        # every id appended once: the q8 rows are all live
-        [_STORES["ann"][1], lambda s, d: _untagged(s, os.path.join(d, "q8"))],
+        [_STORES["ann"][1]],
     ),
 }
 
@@ -367,3 +365,48 @@ def test_compaction_crash_at_every_commit_point(
                 with pytest.raises(_Crash):
                     compaction(spark, d)
             assert read(spark, d) == before[j], f"relation {j}, {point}"
+
+
+def test_json_sidecar_commits_fsync_before_the_rename(
+    spark, tmp_path, monkeypatch
+):
+    """Every JSON commit a store makes — the ANN sequence bump and its
+    ``keys_seq`` watermark, the bottom-k bound, a CDC sink's manifest —
+    fsyncs its temp file right before renaming it onto the live name:
+    a power loss cannot leave an empty sidecar, which the strict
+    sidecar checks would refuse."""
+    from pyspark.sql import functions as F
+
+    from visual_asset_management_system_spark.streaming import cdc
+
+    events = []
+    real_fsync, real_replace = os.fsync, os.replace
+
+    def fsync(fd):
+        events.append("fsync")
+        return real_fsync(fd)
+
+    def replace(src, dst, *args, **kwargs):
+        events.append(os.path.basename(dst))
+        return real_replace(src, dst, *args, **kwargs)
+
+    monkeypatch.setattr(os, "fsync", fsync)
+    monkeypatch.setattr(os, "replace", replace)
+    _STORES["ann"][0](spark, str(tmp_path / "ann"))
+    _STORES["bottomk"][0](spark, str(tmp_path / "bottomk"))
+    cdc.apply_cdc_batch(
+        spark.createDataFrame(
+            [("db", "a1", "INSERT")],
+            "database_id string, asset_id string, event_name string",
+        ),
+        lambda keys: keys.withColumn("doc", F.lit("x")),
+        str(tmp_path / "sink"),
+    )
+    commits = [i for i, e in enumerate(events) if e.endswith(".json")]
+    assert [events[i] for i in commits] == [
+        "ann_meta.json",  # the sequence bump
+        "ann_meta.json",  # keys_seq
+        "sample_k.json",
+        "_manifest.json",
+    ]
+    assert all(events[i - 1] == "fsync" for i in commits), events

@@ -1654,6 +1654,56 @@ def test_suggest_index_incremental_equals_rebuild(spark, tmp_path):
     assert replayed == expected
 
 
+def test_suggest_prefix_logs_stay_bounded_and_replay_serves_rebuild(
+    spark, tmp_path
+):
+    """Each batch's affected-prefix log (``manifests/batch=<key>/``) is
+    removed when the next batch starts, so three updates leave only the
+    newest log; a replay of a completed batch, whose log is gone,
+    recomputes its prefixes from the committed tokens and still serves
+    what a rebuild over the live names serves."""
+    from visual_asset_management_system_spark.operators.inverted_index import (
+        build_suggest_index,
+        suggest_index_update,
+    )
+
+    state = str(tmp_path / "s")
+    schema = (
+        "database_id string, asset_id string, event_name string, "
+        "asset_name string"
+    )
+    batches = [
+        ("b0", [("db", "a1", "INSERT", "red widget"),
+                ("db", "a2", "INSERT", "blue wheel")]),
+        ("b1", [("db", "a1", "MODIFY", "red rocket"),
+                ("db", "a3", "INSERT", "rocket part")]),
+        ("b2", [("db", "a2", "REMOVE", None)]),
+    ]
+    for key, rows in batches:
+        suggest_index_update(spark, state, spark.createDataFrame(rows, schema), key)
+    assert os.listdir(os.path.join(state, "manifests")) == ["batch=b2"]
+
+    live = spark.createDataFrame(
+        [("db", "a1", "red rocket"), ("db", "a3", "rocket part")],
+        "database_id string, asset_id string, asset_name string",
+    )
+    expected = {tuple(r) for r in build_suggest_index(live, "asset_name").collect()}
+
+    def served():
+        return {
+            tuple(r)
+            for r in read_sink(spark, state + "/suggest")
+            .select("prefix", "suggestion", "freq", "rank")
+            .collect()
+        }
+
+    assert served() == expected
+    key, rows = batches[1]  # its log went when b2 started
+    suggest_index_update(spark, state, spark.createDataFrame(rows, schema), key)
+    assert served() == expected
+    assert os.listdir(os.path.join(state, "manifests")) == ["batch=b1"]
+
+
 def test_suggest_sink_compaction(spark, tmp_path):
     """The suggest index's sink is the same partition-layout as the
     search tables, so compact_sink maintains it too: compaction must
@@ -3531,24 +3581,25 @@ def test_ann_store_stats_observes_skew_and_compaction_debt(
 def test_ann_store_sq8_sidecar_parity_plan_replay_compaction(
     spark, tmp_path
 ):
-    """r14 (verdict task 4): the maintained store's SQ8 sidecar. The
+    """The maintained store's SQ8 codes, held in the vectors files. The
     quantized probe must (a) equal the exact probe whenever the true
     top-k survives the rerank cut — pinned here with rerank covering
     every live row, so equality is unconditional; (b) keep its
-    data-sized scans in STAGE 1 only (keys + the narrow q8/ sidecar,
-    both pruned to probed lists), with stage 2 a bounded fetch: the
+    data-sized scans in STAGE 1 only (keys + the vectors relation
+    projected to its narrow SQ8 columns, both pruned to probed lists,
+    the float column unread), with stage 2 a bounded fetch: the
     collected survivor ids PUSHED into the float scan (row-group
     skipping) and the exact (id,_seq,_rh) matched against a LOCAL
     relation — never a second store scan, never a semi-join that
     decodes every float byte;
     (c) survive replay (identical rows under higher seqs); (d) keep
-    parity across compaction, which re-bounds q8/ to one row per live
-    id; (e) HEAL a pre-sidecar store (q8/ absent, no q8_seq): parity
-    read-only via vector-store catch-up, then the next update/compact
-    persists the sidecar and restores the narrow-scan plan."""
+    parity across compaction, which re-bounds the vectors relation,
+    codes included, to one row per live id; (e) REFUSE a store of the
+    earlier layout (a ``q8_seq`` watermark, or a sidecar without its
+    frozen vec/id types), whose vectors files carry no codes: every
+    read, update and compaction raises "rebuild the store"."""
     import json
     import re
-    import shutil
 
     from visual_asset_management_system_spark.operators.similarity import (
         ann_index_update,
@@ -3630,30 +3681,38 @@ def test_ann_store_sq8_sidecar_parity_plan_replay_compaction(
     )
     assert quant() == exact()
 
-    # (d) compaction re-bounds BOTH datasets to one row per live id
+    # (d) compaction re-bounds the vectors relation, codes included, to
+    # one row per live id
     nrows = compact_ann_store(spark, store)
     assert nrows == 40
-    assert spark.read.parquet(os.path.join(store, "q8")).count() == 40
+    assert spark.read.parquet(os.path.join(store, "vectors")).count() == 40
     assert quant() == exact()
 
-    # (e) pre-sidecar store: q8/ gone, watermark gone — parity must
-    # hold read-only (catch-up quantizes the missed rows from the
-    # vector store), and the next update persists the sidecar
-    shutil.rmtree(os.path.join(store, "q8"))
+    # (e) earlier-layout sidecars are refused by every entry point
     mpath = os.path.join(store, "ann_meta.json")
     with open(mpath) as f:
         meta = json.load(f)
-    meta.pop("q8_seq")
+    earlier = [{**meta, "q8_seq": meta["seq"]}] + [
+        {k: v for k, v in meta.items() if k != field}
+        for field in ("vec_type", "id_type", "vec_name")
+    ]
+    one = spark.createDataFrame([(99, [9.0] * 8)], schema)
+    for legacy in earlier:
+        with open(mpath, "w") as f:
+            json.dump(legacy, f)
+        for call in (
+            quant,
+            exact,
+            lambda: ann_index_update(
+                spark, store, one, 8, n_lists=4, batch_key="b3"
+            ),
+            lambda: compact_ann_store(spark, store),
+        ):
+            with pytest.raises(ValueError, match="rebuild the store"):
+                call()
     with open(mpath, "w") as f:
         json.dump(meta, f)
-    assert quant() == exact()
-    ann_index_update(
-        spark, store, spark.createDataFrame([(99, [9.0] * 8)], schema), 8,
-        n_lists=4, batch_key="b3",
-    )
-    with open(mpath) as f:
-        healed = json.load(f)
-    assert healed["q8_seq"] == healed["seq"]
+    ann_index_update(spark, store, one, 8, n_lists=4, batch_key="b3")
     assert quant() == exact()
     h1, _h2 = plans()
     assert len(re.findall(r"FileScan parquet", h1)) == 2, h1
@@ -3683,6 +3742,30 @@ def test_ann_store_sq8_sidecar_parity_plan_replay_compaction(
         ).collect()
     ]
     assert all(s is None for _, s in zq) and len(zq) == 5
+
+
+def test_ann_store_update_and_compaction_job_budget(
+    spark, tmp_path, jobs_and_tasks
+):
+    """A warm ann_index_update starts at most 10 Spark jobs and
+    compact_ann_store at most 7: one append writes the vectors with
+    their SQ8 codes, the live-key merge is the update's only read-back,
+    and compaction is a single rewrite of the vectors relation."""
+    from visual_asset_management_system_spark.operators.similarity import (
+        ann_index_update,
+        compact_ann_store,
+    )
+
+    store, _rows, schema = _mk_ann_store(spark, tmp_path, with_upsert=False)
+    batch = spark.createDataFrame([(3, [50.0] * 8), (41, [1.0] * 8)], schema)
+    jobs, _ = jobs_and_tasks(
+        lambda: ann_index_update(
+            spark, store, batch, 8, n_lists=4, batch_key="b2"
+        )
+    )
+    assert jobs <= 10, f"{jobs} Spark jobs for a warm update"
+    jobs, _ = jobs_and_tasks(lambda: compact_ann_store(spark, store))
+    assert jobs <= 7, f"{jobs} Spark jobs for a compaction"
 
 
 def test_ann_store_zero_norm_vectors_probe_null_not_error(

@@ -495,8 +495,9 @@ _STORE_MODULE = os.path.join("operators", "store.py")
 
 def _store_protocol_offences(tree) -> list[str]:
     """What a module does that only the store protocol may: call
-    ``swap_dir``, name a rewrite's tmp directory, or put the
-    ``batch_key`` tag column on a frame (``withColumn``/``alias``)."""
+    ``swap_dir`` or ``recover_dir``, name a rewrite's tmp directory,
+    append with ``mode("append")``, or put the ``batch_key`` tag column
+    on a frame (``withColumn``/``alias``)."""
     hits = []
     for n in ast.walk(tree):
         if isinstance(n, ast.Constant) and isinstance(n.value, str):
@@ -506,8 +507,15 @@ def _store_protocol_offences(tree) -> list[str]:
         if not isinstance(n, ast.Call):
             continue
         name = getattr(n.func, "attr", getattr(n.func, "id", None))
-        if name == "swap_dir":
-            hits.append(f"{n.lineno}: calls swap_dir")
+        if name in ("swap_dir", "recover_dir"):
+            hits.append(f"{n.lineno}: calls {name}")
+        if (
+            name == "mode"
+            and n.args
+            and isinstance(n.args[0], ast.Constant)
+            and n.args[0].value == "append"
+        ):
+            hits.append(f"{n.lineno}: writes with mode(\"append\")")
         if (
             name in ("withColumn", "alias")
             and n.args
@@ -521,9 +529,10 @@ def _store_protocol_offences(tree) -> list[str]:
 def test_store_protocol_lives_in_the_store_module():
     """Every batch-keyed store appends, reads, compacts and rewrites
     through operators/store.py: no other package module may promote a
-    rewrite with swap_dir, name its tmp directory, or tag rows with
-    ``batch_key`` itself. A store that hand-rolls its own append or
-    compaction fails here."""
+    rewrite with swap_dir, heal one with recover_dir, name its tmp
+    directory, append with ``mode("append")``, or tag rows with
+    ``batch_key`` itself. A store that hand-rolls its own append, read
+    or compaction fails here."""
     import visual_asset_management_system_spark as pkg
 
     root = os.path.dirname(pkg.__file__)

@@ -469,7 +469,10 @@ def suggest_index_update(
     - ``suggest/`` — (prefix, suggestion, freq, rank): the serving
       table, a CDC merge sink keyed on the PREFIX — read it with
       streaming.cdc.read_sink;
-    - ``manifests/batch=<key>/`` — the batch's affected-prefix set.
+    - ``manifests/batch=<key>/`` — the batch's affected-prefix set,
+      removed when another batch starts (in-order delivery replays
+      only the last batch; until then the frame this call returns
+      reads it).
 
     Only prefixes of tokens touched by the batch (old tokens of the
     changed entities ∪ their new tokens) are recomputed; each affected
@@ -482,12 +485,16 @@ def suggest_index_update(
     computed from the PRE-update store and persisted as a manifest
     BEFORE any state is touched — a replay after a mid-batch crash
     reuses it, so a rename's obsolete prefixes are refreshed even
-    though the replayed store no longer shows the old tokens. The
+    though the replayed store no longer shows the old tokens. A replay
+    after the log was removed (the batch completed) recomputes the set
+    from the committed tokens: a subset of the original, whose
+    prefixes ``suggest/`` already serves correctly. The
     suggest recompute itself derives the post-batch token relation
     functionally (store minus changed keys, plus new rows), which is
     idempotent under any crash point; both sink merges are idempotent
     partition rewrites."""
     import os
+    import shutil
 
     from pyspark.sql import Window
 
@@ -496,7 +503,12 @@ def suggest_index_update(
     key_cols = list(key_cols)
     tokens_dir = os.path.join(state_dir, "tokens")
     suggest_dir = os.path.join(state_dir, "suggest")
-    manifest_dir = os.path.join(state_dir, "manifests", f"batch={batch_key}")
+    logs_dir = os.path.join(state_dir, "manifests")
+    manifest_dir = os.path.join(logs_dir, f"batch={batch_key}")
+    if os.path.isdir(logs_dir):
+        for d in os.listdir(logs_dir):
+            if d != f"batch={batch_key}":
+                shutil.rmtree(os.path.join(logs_dir, d), ignore_errors=True)
 
     # one change per key (last within the batch wins when a seq exists)
     ch = changes

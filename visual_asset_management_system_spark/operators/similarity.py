@@ -26,7 +26,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from . import store
-from ..streaming.driver import recover_dir, run_micro_batches
+from ..streaming.driver import commit_json, run_micro_batches
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -524,10 +524,20 @@ def semdedup(
 #   byte-identical vectors under a higher seq (same winner — replays
 #   are free), and a genuine re-embedding of an existing id wins
 #   deterministically (the CDC upsert semantics, without a rewrite);
+# - each row carries its SQ8 codes (``q8``/``q_scale``/``nrm``, see
+#   quantize_embeddings) in the same file as its vector, written by the
+#   same append: the quantized probe's first pass projects the narrow
+#   columns and parquet skips the float column's bytes, so the narrow
+#   scan needs no relation, watermark or compaction of its own;
+# - the store is two relations, ``vectors/`` and the live-key relation
+#   ``keys/``, with one coverage watermark (``keys_seq``) in the
+#   sidecar; every read goes through store.read;
 # - compaction keeps each id's winning row (store.rewrite).
 #   Re-TRAINING centroids is a rebuild (new store), exactly as
 #   re-sharding a FAISS IVF is — the sidecar's params are index format,
-#   validated at every seam (the Bloom m-mismatch class).
+#   validated at every seam (the Bloom m-mismatch class). A store of an
+#   earlier layout (a ``q8_seq`` watermark, or no frozen vec/id types)
+#   is refused with "rebuild the store", never healed.
 #
 # Probe-side equivalence is differentially testable: with the same
 # centroids, ann_store_topk over any batch split + replays equals
@@ -560,6 +570,12 @@ def _ann_dirs(store_dir: str) -> str:
     return os.path.join(store_dir, "vectors")
 
 
+def _ann_meta_path(store_dir: str) -> str:
+    import os
+
+    return os.path.join(store_dir, "ann_meta.json")
+
+
 def _ann_meta(
     store_dir: str,
     op: str,
@@ -580,14 +596,18 @@ def _ann_meta(
     rather than silently re-initializing the store at seq 0 (which
     would put new appends BELOW existing rows and serve stale vectors
     with no error anywhere), and a missing sidecar beside an existing
-    vectors directory is corruption, not a fresh store. With
-    ``bump_seq`` the sequence is incremented and persisted BEFORE the
-    caller's append — a crash between the two burns a sequence number,
-    which is harmless (ordering stays monotone)."""
+    vectors directory is corruption, not a fresh store. A sidecar of
+    an earlier layout — one carrying the retired ``q8_seq`` watermark
+    (its vectors files hold no SQ8 codes) or lacking a frozen
+    ``vec_type``/``id_type``/``vec_name`` — is refused: rebuild the
+    store. With ``bump_seq`` the sequence is incremented and persisted
+    (:func:`commit_json`) BEFORE the caller's append — a crash between
+    the two burns a sequence number, which is harmless (ordering stays
+    monotone)."""
     import json
     import os
 
-    path = os.path.join(store_dir, "ann_meta.json")
+    path = _ann_meta_path(store_dir)
     try:
         with open(path) as f:
             raw = f.read()
@@ -661,6 +681,15 @@ def _ann_meta(
             "vec_name": vec_name or "embedding",
         }
     else:
+        if "q8_seq" in meta or any(
+            f not in meta for f in ("vec_type", "id_type", "vec_name")
+        ):
+            raise ValueError(
+                f"ann store {op}: {store_dir} has an earlier layout (a "
+                f"q8_seq watermark, or no vec_type/id_type/vec_name in "
+                f"the sidecar): its vectors files carry no SQ8 codes — "
+                f"rebuild the store"
+            )
         if dim is not None and int(meta["dim"]) != int(dim):
             raise ValueError(
                 f"ann store {op} with dim={dim}, but the store's frozen "
@@ -685,18 +714,8 @@ def _ann_meta(
                 f"use the stored centroids, or rebuild."
             )
     if bump_seq:
-        # legacy (pre-r12) sidecars carry no vec_type: adopt float —
-        # what every r11-era store holds — and persist it with the
-        # sequence bump (likewise id_type, pre-r14)
-        meta.setdefault("vec_type", "array<float>")
-        meta.setdefault("id_type", id_type or "bigint")
-        meta.setdefault("vec_name", vec_name or "embedding")
-        meta["seq"] = int(meta.get("seq", 0)) + 1
-        os.makedirs(store_dir, exist_ok=True)
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-        os.replace(tmp, path)
+        meta["seq"] = int(meta["seq"]) + 1
+        commit_json(path, meta)
     return meta
 
 
@@ -721,13 +740,14 @@ def ann_index_update(
     the sidecar's monotone ``_seq`` plus ``_rh``, a write-time vector
     hash — the winner-selection tie-break, stored so reads can pick
     winners from the THIN (id, _seq, _rh, list) projection without
-    touching vector bytes. The store is never read on the write path —
-    a backfill is one bounded append per batch."""
+    touching vector bytes — and the vector's SQ8 codes
+    (:func:`quantize_embeddings`), so the quantized probe's narrow
+    first pass is a column projection of the same files. One append
+    per batch; the vector store is never read on the write path, only
+    the live-key merge reads the rows appended since its watermark."""
     import os
 
-    vecs = _ann_dirs(store_dir)
-    recover_dir(vecs)
-    first = not os.path.isfile(os.path.join(store_dir, "ann_meta.json"))
+    first = not os.path.isfile(_ann_meta_path(store_dir))
     if first and centroids is None:
         centroids = sample_centroids(
             new_embeddings.filter(
@@ -744,7 +764,7 @@ def ann_index_update(
         vec_name=vec_col,
     )
     cents = np.asarray(meta["centroids"], dtype=np.float64)
-    assigned = (
+    rows = (
         new_embeddings.select(
             F.col(id_col),
             # cast to the store's FROZEN element type before anything
@@ -759,6 +779,10 @@ def ann_index_update(
         .withColumn("_list", _nearest_list(F.col(vec_col), cents))
         .withColumn("_seq", F.lit(int(meta["seq"])))
         .withColumn("_rh", F.xxhash64(F.col(vec_col)))
+    )
+    keep = (vec_col, "_list", "_seq", "_rh")
+    assigned = (
+        quantize_embeddings(rows, id_col, vec_col, keep_cols=keep)
         # co-locate each list before the partitioned write (one file
         # per touched list directory, not shuffle-partitions × lists),
         # and sort by id WITHIN each list: parquet's page-level column
@@ -771,9 +795,10 @@ def ann_index_update(
         .repartition("_list")
         .sortWithinPartitions("_list", id_col)
     )
-    store.append(assigned, vecs, batch_key, partition_col="_list")
+    store.append(
+        assigned, _ann_dirs(store_dir), batch_key, partition_col="_list"
+    )
     _merge_ann_keys(spark, store_dir, meta, id_col)
-    _merge_ann_q8(spark, store_dir, meta, id_col, vec_col, batch=assigned)
 
 
 def _ann_keys_dir(store_dir: str) -> str:
@@ -782,42 +807,18 @@ def _ann_keys_dir(store_dir: str) -> str:
     return os.path.join(store_dir, "keys")
 
 
-def _ann_set_meta_field(store_dir: str, field: str, value: int) -> None:
-    """Persist a coverage watermark (``keys_seq`` / ``q8_seq``) — ONLY
-    after the artifact it describes is durably in place, so a crash
-    mid-merge leaves the sidecar claiming the old (true) coverage."""
-    import json
-    import os
-
-    path = os.path.join(store_dir, "ann_meta.json")
-    with open(path) as f:
-        meta = json.load(f)
-    meta[field] = int(value)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, path)
-
-
-def _ann_set_keys_seq(store_dir: str, keys_seq: int) -> None:
-    _ann_set_meta_field(store_dir, "keys_seq", keys_seq)
-
-
 def _ann_empty_vectors(spark, meta: dict, id_col: str, vec_col: str):
     """Typed EMPTY vectors relation for a created-but-unbackfilled
     store (centroids seeded, zero part files): the append schema from
     the sidecar's frozen types, so probing between create and the
     first real append returns an empty result instead of
     unable-to-infer-schema — the read-side twin of the
-    create-then-backfill no-op guard in :func:`_merge_ann_keys`.
-    Legacy sidecars without id_type default to bigint (every fixture
-    store's id); a fileless legacy store is the only case where that
-    default could matter and none can exist (pre-r13 creates always
-    wrote rows)."""
+    create-then-backfill no-op guard in :func:`_merge_ann_keys`."""
     return spark.createDataFrame(
         [],
-        f"{id_col} {meta.get('id_type', 'bigint')}, "
-        f"{vec_col} {meta.get('vec_type', 'array<float>')}, "
+        f"{id_col} {meta['id_type']}, "
+        "q8 array<tinyint>, q_scale double, nrm double, "
+        f"{vec_col} {meta['vec_type']}, "
         "_seq bigint, _rh bigint, batch_key string, _list int",
     )
 
@@ -846,154 +847,37 @@ def _merge_ann_keys(spark, store_dir, meta: dict, id_col: str) -> None:
     Crash-safe by catch-up, not by atomicity with the append: the
     delta is read back from the STORE (rows with _seq > keys_seq),
     not from the caller's batch, so a crash between a vector append
-    and this merge just leaves keys_seq behind — the next merge (or
-    any read, via :func:`_ann_live_keys`) folds the missed rows in.
-    Keys are partitioned by ``_list`` so probes prune their key scan
-    to the probed lists, same as the vector fetch."""
-    import os
-
+    and this merge just leaves keys_seq — the store's one watermark,
+    committed only after the rewrite — behind; the next merge (or any
+    read, via :func:`_ann_live_keys`) folds the missed rows in. Keys
+    are partitioned by ``_list`` so probes prune their key scan to the
+    probed lists, same as the vector fetch."""
     kdir = _ann_keys_dir(store_dir)
-    recover_dir(kdir)
     keys_seq = int(meta.get("keys_seq", 0))
     seq = int(meta["seq"])
-    if keys_seq >= seq and os.path.isdir(kdir):
+    keys = store.read(spark, kdir)
+    if keys_seq >= seq and keys is not None:
         return
-    if not store.has_data(_ann_dirs(store_dir)):
+    rows = store.read(spark, _ann_dirs(store_dir))
+    if rows is None:
         # a brand-new store seeded with explicit centroids and an
         # empty (or all-NULL) first batch wrote zero part-files —
-        # there is nothing to merge, and reading the fileless dataset
-        # would raise unable-to-infer-schema (create-then-backfill
-        # must stay a silent no-op, as pre-keys appends were)
+        # there is nothing to merge (create-then-backfill is a silent
+        # no-op)
         return
     thin = [id_col, "_seq", "_rh", "_list"]
-    delta = spark.read.parquet(_ann_dirs(store_dir)).select(*thin)
-    if os.path.isdir(kdir):
+    delta = rows.select(*thin)
+    if keys is not None:
         # only rows appended after the last merge; keys hold the rest.
-        # Without keys (a pre-keys store) take the full thin projection —
-        # legacy compactions wrote _seq=0, which a >0 filter would drop.
-        delta = (
-            spark.read.parquet(kdir)
-            .select(*thin)
-            .unionByName(delta.filter(F.col("_seq") > keys_seq))
+        # Without keys (lost, or never merged) take the full thin
+        # projection.
+        delta = keys.select(*thin).unionByName(
+            delta.filter(F.col("_seq") > keys_seq)
         )
     merged = _ann_winners(delta, id_col).repartition("_list")
     store.rewrite(spark, merged, kdir, partition_col="_list")
-    _ann_set_keys_seq(store_dir, seq)
-
-
-def _ann_q8_dir(store_dir: str) -> str:
-    import os
-
-    return os.path.join(store_dir, "q8")
-
-
-def _ann_empty_q8(spark, meta: dict, id_col: str) -> DataFrame:
-    """Typed EMPTY sidecar relation (the :func:`_ann_empty_vectors`
-    twin): probing a created-but-unbackfilled store through the
-    quantized tier returns 0 rows, never unable-to-infer-schema."""
-    return spark.createDataFrame(
-        [],
-        f"{id_col} {meta.get('id_type', 'bigint')}, "
-        "q8 array<tinyint>, q_scale double, nrm double, "
-        "_seq bigint, _rh bigint, _list int",
-    )
-
-
-def _merge_ann_q8(
-    spark,
-    store_dir: str,
-    meta: dict,
-    id_col: str,
-    vec_col: str,
-    batch: "DataFrame | None" = None,
-) -> None:
-    """Maintain the SQ8 sidecar (q8/): the NARROW first-pass relation
-    the quantized probe scans — (id, q8 array<tinyint>, q_scale, nrm,
-    _seq, _rh) partitioned by ``_list``, 1 byte per vector element
-    instead of 4-8, derived deterministically from the stored vector
-    (same :func:`quantize_embeddings` math as the batch tier). This is
-    what makes the tier's measured 3.2× scan-byte cut reach the
-    MAINTAINED store: without it only batch-built relations get the
-    narrow first pass while the store's probes scan float vectors.
-
-    Crash-safe by catch-up exactly like keys/ (``q8_seq`` in the
-    sidecar meta, set only AFTER the append): the common case appends
-    the quantization of the update batch just written (``batch`` — no
-    store read at all); if ``q8_seq`` is further behind (a crash
-    between the vector append and this merge, or a pre-sidecar store),
-    the missed rows are read back from the store by ``_seq > q8_seq``
-    — parquet row-group stats on the per-file-constant ``_seq`` skip
-    already-covered files — quantized, and appended. Replays re-add
-    identical rows under higher seqs; winner selection (the live-key
-    semi-join, same rule as every read) absorbs them."""
-    q8_seq = int(meta.get("q8_seq", 0))
-    seq = int(meta["seq"])
-    if q8_seq >= seq:
-        return
-    if not store.has_data(_ann_dirs(store_dir)):
-        # create-then-backfill: zero part files, nothing to quantize
-        return
-    qdir = _ann_q8_dir(store_dir)
-    recover_dir(qdir)
-    keep = ("_list", "_seq", "_rh")
-    if batch is not None and q8_seq == seq - 1 and store.has_data(qdir):
-        delta = batch
-    else:
-        delta = spark.read.parquet(_ann_dirs(store_dir))
-        if store.has_data(qdir):
-            delta = delta.filter(F.col("_seq") > q8_seq)
-        # else: first sidecar build over a pre-sidecar store — take the
-        # FULL projection (the _merge_ann_keys discipline: legacy
-        # compactions wrote _seq=0, which a >0 filter would drop)
-    q8 = (
-        quantize_embeddings(
-            delta.select(id_col, vec_col, *keep),
-            id_col,
-            vec_col,
-            keep_cols=keep,
-        )
-        .repartition("_list")
-        .sortWithinPartitions("_list", id_col)
-    )
-    q8.write.mode("append").partitionBy("_list").parquet(qdir)
-    _ann_set_meta_field(store_dir, "q8_seq", seq)
-
-
-def _ann_q8_relation(
-    spark, store_dir: str, meta: dict, id_col: str, vec_col: str
-) -> DataFrame:
-    """The SQ8 sidecar as a read, covering the store's full sequence
-    range: the maintained q8/ dataset when ``q8_seq`` covers the
-    sidecar seq (bounded, list-partitioned, the narrow scan), with any
-    missed rows (crash window, pre-sidecar store) quantized from the
-    vector store read-only — the :func:`_ann_live_keys` catch-up
-    discipline; the next update persists them."""
-    qdir = _ann_q8_dir(store_dir)
-    recover_dir(qdir)
-    q8_seq = int(meta.get("q8_seq", 0))
-    have = store.has_data(qdir)
-    base = (
-        spark.read.parquet(qdir)
-        if have
-        else _ann_empty_q8(spark, meta, id_col)
-    )
-    if q8_seq >= int(meta["seq"]):
-        return base
-    vecs = _ann_dirs(store_dir)
-    recover_dir(vecs)
-    if not store.has_data(vecs):
-        return base
-    keep = ("_list", "_seq", "_rh")
-    vname = meta.get("vec_name", "embedding")
-    raw = spark.read.parquet(vecs)
-    if have:
-        raw = raw.filter(F.col("_seq") > q8_seq)
-    # else: pre-sidecar store — full projection, no seq filter (legacy
-    # compactions wrote _seq=0; the _merge_ann_keys discipline)
-    delta = quantize_embeddings(
-        raw.select(id_col, vname, *keep), id_col, vname, keep_cols=keep
-    )
-    return base.unionByName(delta)
+    meta["keys_seq"] = seq
+    commit_json(_ann_meta_path(store_dir), meta)
 
 
 def _ann_live_keys(
@@ -1004,31 +888,22 @@ def _ann_live_keys(
     any list — see :func:`ann_store_topk`). Common case: the maintained
     keys/ artifact covers the sidecar seq and is returned as-is —
     bounded, list-partitioned, no store scan. If keys/ is behind
-    (crash between append and merge) or absent (a pre-keys store), the
-    thin delta is folded in read-only; the next update persists it."""
-    import os
-
-    kdir = _ann_keys_dir(store_dir)
-    recover_dir(kdir)
+    (crash between append and merge) or absent, the thin delta is
+    folded in read-only; the next update persists it."""
     keys_seq = int(meta.get("keys_seq", 0))
-    have = os.path.isdir(kdir)
-    if have and keys_seq >= int(meta["seq"]):
-        return spark.read.parquet(kdir)
+    keys = store.read(spark, _ann_keys_dir(store_dir))
+    if keys is not None and keys_seq >= int(meta["seq"]):
+        return keys
     thin_cols = [id_col, "_seq", "_rh", "_list"]
-    vecs = _ann_dirs(store_dir)
-    recover_dir(vecs)
-    if not store.has_data(vecs):
-        # created-but-unbackfilled store: no rows ⇒ no live keys
-        # (keys/ cannot exist yet — its merge no-ops on the same guard)
-        return _ann_empty_vectors(
-            spark, meta, id_col, meta.get("vec_name", "embedding")
-        ).select(*thin_cols)
-    delta = spark.read.parquet(vecs).select(*thin_cols)
-    if have:
-        delta = (
-            spark.read.parquet(kdir)
-            .select(*thin_cols)
-            .unionByName(delta.filter(F.col("_seq") > keys_seq))
+    # a created-but-unbackfilled store reads as its empty typed twin:
+    # no rows ⇒ no live keys (keys/ cannot exist yet — its merge
+    # no-ops on the same guard)
+    delta = _ann_vectors(
+        spark, store_dir, meta, id_col, meta["vec_name"]
+    ).select(*thin_cols)
+    if keys is not None:
+        delta = keys.select(*thin_cols).unionByName(
+            delta.filter(F.col("_seq") > keys_seq)
         )
     return _ann_winners(delta, id_col)
 
@@ -1062,10 +937,10 @@ def ann_store_read(
     replays are free. Reader-side work grows with appended batches
     until :func:`compact_ann_store` re-bounds it."""
     meta = _ann_meta(store_dir, "read")
-    rows = _ann_vectors(
-        spark, store_dir, meta, id_col, meta.get("vec_name", "embedding")
+    rows = _ann_vectors(spark, store_dir, meta, id_col, meta["vec_name"])
+    return _ann_winners(rows, id_col).drop(
+        "q8", "q_scale", "nrm", "_seq", "_rh", store.TAG
     )
-    return _ann_winners(rows, id_col).drop("_seq", "_rh", store.TAG)
 
 
 def ann_store_topk(
@@ -1181,16 +1056,12 @@ def compact_ann_store(
     compaction never has to rewrite keys/ and there is no crash window
     where the two artifacts disagree (a reset-to-zero would need both
     swaps to be atomic together). Probe results are UNCHANGED by
-    compaction — the winner set is identical. Replays after compaction re-add rows
-    under later seqs the reader dedup absorbs. Returns the
-    post-compaction row count.
-
-    The SQ8 sidecar (q8/) is re-bounded in the same pass: rebuilt from
-    the compacted winners (quantization is a pure function of the
-    stored vector, so rebuild ≡ catch-up), its own rewrite, and
-    ``q8_seq`` re-pinned to the sidecar seq — which also HEALS a
-    pre-sidecar store into the narrow-scan layout."""
-    meta = _ann_meta(store_dir, "compaction")
+    compaction — the winner set is identical. Replays after compaction
+    re-add rows under later seqs the reader dedup absorbs. The winners
+    carry their SQ8 codes, so the quantized probe's narrow columns are
+    re-bounded by the same single rewrite. Returns the post-compaction
+    row count."""
+    _ann_meta(store_dir, "compaction")
     vecs = _ann_dirs(store_dir)
     rows = store.read(spark, vecs)
     if rows is None:
@@ -1202,25 +1073,7 @@ def compact_ann_store(
         .repartition("_list")
         .sortWithinPartitions("_list", id_col)
     )
-    n = store.rewrite(spark, compacted, vecs, partition_col="_list")
-
-    qdir = _ann_q8_dir(store_dir)
-    recover_dir(qdir)
-    keep = ("_list", "_seq", "_rh")
-    vname = meta.get("vec_name", "embedding")
-    q8 = (
-        quantize_embeddings(
-            spark.read.parquet(vecs).select(id_col, vname, *keep),
-            id_col,
-            vname,
-            keep_cols=keep,
-        )
-        .repartition("_list")
-        .sortWithinPartitions("_list", id_col)
-    )
-    store.rewrite(spark, q8, qdir, partition_col="_list")
-    _ann_set_meta_field(store_dir, "q8_seq", int(meta["seq"]))
-    return n
+    return store.rewrite(spark, compacted, vecs, partition_col="_list")
 
 
 def ann_store_stats(
@@ -1237,8 +1090,6 @@ def ann_store_stats(
     centroids no longer fit the data and the store wants a rebuild).
     Lists every configured list, including empty ones — a silent
     all-zero list is itself a skew signal."""
-    import os
-
     meta = _ann_meta(store_dir, "read")
     lists = spark.range(int(meta["n_lists"])).select(
         F.col("id").cast("int").alias("list_id")
@@ -1248,10 +1099,8 @@ def ann_store_stats(
         .groupBy(F.col("_list").cast("int").alias("list_id"))
         .agg(F.count(F.lit(1)).alias("live_rows"))
     )
-    vecs = _ann_dirs(store_dir)
-    recover_dir(vecs)
     raw = (
-        spark.read.parquet(vecs)
+        _ann_vectors(spark, store_dir, meta, id_col, meta["vec_name"])
         .groupBy(F.col("_list").cast("int").alias("list_id"))
         .agg(F.count(F.lit(1)).alias("raw_rows"))
     )
@@ -1462,8 +1311,8 @@ def quantize_embeddings(
     engine-wide zero-norm semantics.
 
     ``keep_cols`` pass through untouched — the maintained ANN store's
-    sidecar append uses them to carry (_list, _seq, _rh) alongside the
-    quantized columns without a self-join back to the batch."""
+    append uses them to carry the vector and (_list, _seq, _rh)
+    alongside the quantized columns, so one file holds both tiers."""
     extra = list(keep_cols)
     vec_d = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     staged = embeddings.select(
@@ -1514,7 +1363,7 @@ def _sq8_query_prep(query_vector: list[float]) -> "tuple[float, list[int]] | Non
 def _sq8_approx_score(
     q_scale: float, q8q: list[int], query_norm: float
 ) -> Column:
-    """The SQ8 asymmetric approximate cosine over sidecar columns
+    """The SQ8 asymmetric approximate cosine over the SQ8 columns
     ``q8``/``q_scale``/``nrm`` — int8×int8 dot accumulated JVM-side as
     long, rescaled by (row scale · query scale), divided by the TRUE
     norms captured at quantization time. One definition shared by the
@@ -1624,19 +1473,21 @@ def ann_store_topk_quantized(
     vec_col: str = "embedding",
     round_digits: int = 6,
 ) -> DataFrame:
-    """Probe the maintained IVF index through its SQ8 sidecar: the
+    """Probe the maintained IVF index through its SQ8 codes: the
     :func:`ann_store_topk` probe shape (frozen-centroid list choice
     driver-side via :func:`_sqdist_fold`, live-key global winners,
     probed-list partition pruning on every scan) with the FIRST pass
-    over the NARROW q8/ relation — 1 byte per element instead of the
-    float vector — and only the top ``rerank`` survivors' full
+    over the NARROW ``q8``/``q_scale``/``nrm`` columns of the vectors
+    files — 1 byte per element; parquet's column projection skips the
+    float vector's bytes — and only the top ``rerank`` survivors' full
     vectors touched for the exact re-rank.
 
     Plan shape: stage 1 (:func:`_ann_sq8_survivors`, plan-asserted)
-    holds the probe's only data-sized scans — keys + the narrow q8/
-    sidecar, both pruned to the probed lists — scores every live row
-    with the shared :func:`_sq8_approx_score`, and keeps the top
-    ``rerank`` (id, _seq, _rh) triples via TakeOrderedAndProject.
+    holds the probe's only data-sized scans — keys + the vectors
+    relation projected to its narrow columns, both pruned to the
+    probed lists — scores every live row with the shared
+    :func:`_sq8_approx_score`, and keeps the top ``rerank`` (id,
+    _seq, _rh) triples via TakeOrderedAndProject.
     Those triples are collected driver-side (bounded by the ``rerank``
     parameter, the probe-list collect class) and stage 2 fetches
     EXACTLY those rows from the float partitions: the id set reaches
@@ -1706,8 +1557,9 @@ def _ann_sq8_survivors(
     plan is assertable on its own: the live (id, _seq, _rh) triples of
     the probed lists ranked by the shared approximate score, top
     ``rerank`` kept via TakeOrderedAndProject. The only data-sized
-    scans of the whole probe live here — keys + q8/, both pruned to
-    the probed lists; the float vectors are never touched."""
+    scans of the whole probe live here — keys + the vectors relation
+    projected to its SQ8 columns, both pruned to the probed lists; the
+    float vector column is never read."""
     q_scale, q8q = prep
     live_keys = (
         _ann_live_keys(spark, store_dir, meta, id_col)
@@ -1715,7 +1567,8 @@ def _ann_sq8_survivors(
         .select(id_col, "_seq", "_rh")
     )
     live_q8 = (
-        _ann_q8_relation(spark, store_dir, meta, id_col, vec_col)
+        _ann_vectors(spark, store_dir, meta, id_col, vec_col)
+        .select(id_col, "q8", "q_scale", "nrm", "_seq", "_rh", "_list")
         .filter(F.col("_list").isin(*probe))
         .join(live_keys, [id_col, "_seq", "_rh"], "left_semi")
         .dropDuplicates([id_col])

@@ -53,7 +53,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from . import store
-from ..streaming.driver import run_micro_batches
+from ..streaming.driver import commit_json, run_micro_batches
 from .sampling import _HASH_SPACE, sample_hash
 
 #: default sketch size — relative σ ≈ 1/√62 ≈ 12.7%
@@ -927,8 +927,8 @@ def _bottomk_meta(
       under different salts carry incomparable ``__h`` ranks, so the
       merged 'bottom-k' is the bottom-k of no consistent hash order.
 
-    With ``record`` the sidecar is lowered/initialized via atomic
-    replace, written BEFORE the append so a crash between the two
+    With ``record`` the sidecar is lowered/initialized by
+    :func:`commit_json`, BEFORE the append so a crash between the two
     leaves the bound conservatively small (can only reject valid
     reads, never admit wrong ones). Stores predating the sidecar
     validate nothing (None meta)."""
@@ -994,11 +994,7 @@ def _bottomk_meta(
             "salt": salt if meta is None else (meta.get("salt") or salt),
         }
         if meta != new:
-            os.makedirs(store_dir, exist_ok=True)
-            tmp = path + ".tmp"
-            with open(tmp, "w") as f:
-                _json.dump(new, f)
-            os.replace(tmp, path)
+            commit_json(path, new)
 
 
 def bottomk_store_update(

@@ -5,10 +5,12 @@ that grow by blind appends, one per batch, and are re-bounded by a
 compaction that rewrites them. The stores built on this module are
 KMV, count-min, Bloom and bottom-k (sketches.py), the setsim prefix and
 arrays relations (setsim_store.py), the gram store and corpus
-fingerprints (corpus.py) and the MinHash signatures (dedup.py); the
-ANN store (similarity.py) appends, reads and rewrites through it under
-its own sidecar and watermark logic. Each store keeps only its
-directory name, its schema and its merge function.
+fingerprints (corpus.py), the MinHash signatures (dedup.py) and the
+ANN store's ``vectors/`` and ``keys/`` (similarity.py, whose sidecar
+keeps the frozen index format and one ``keys_seq`` watermark). Each
+store keeps only its directory name, its schema and its merge
+function. No other module heals a swap (``recover_dir``) or appends
+with ``mode("append")``.
 
 **Tagged append.** :func:`append` writes a batch's rows with a
 ``batch_key`` string column holding the batch's key (the stream

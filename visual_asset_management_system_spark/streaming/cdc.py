@@ -56,7 +56,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .driver import run_micro_batches
+from .driver import commit_json, run_micro_batches
 
 #: number of hash partitions of the parquet "search table" sink; at scale
 #: this is the table's physical partitioning (or a Delta table + MERGE).
@@ -170,20 +170,15 @@ def _load_manifest(sink_dir: str) -> dict[int, str]:
 
 
 def _commit_manifest(sink_dir: str, parts: dict[int, str]) -> None:
-    """Atomically publish a new snapshot: write the manifest to a temp
-    sibling, fsync, and rename onto ``_manifest.json`` — the one-file
-    commit point. On an object store this is a single PUT of a small
-    object (atomic per-object), which is exactly why all data
-    directories are immutable and only this pointer ever changes."""
-    os.makedirs(sink_dir, exist_ok=True)
-    tmp = os.path.join(sink_dir, f".{MANIFEST_NAME}.tmp-{uuid.uuid4().hex}")
-    with open(tmp, "w") as f:
-        json.dump(
-            {"parts": {str(k): v for k, v in sorted(parts.items())}}, f
-        )
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, os.path.join(sink_dir, MANIFEST_NAME))
+    """Atomically publish a new snapshot: :func:`commit_json` onto
+    ``_manifest.json`` — the one-file commit point. On an object store
+    this is a single PUT of a small object (atomic per-object), which
+    is exactly why all data directories are immutable and only this
+    pointer ever changes."""
+    commit_json(
+        os.path.join(sink_dir, MANIFEST_NAME),
+        {"parts": {str(k): v for k, v in sorted(parts.items())}},
+    )
 
 
 def _vacuum_unreferenced(sink_dir: str, parts: dict[int, str]) -> None:
@@ -205,10 +200,6 @@ def _vacuum_unreferenced(sink_dir: str, parts: dict[int, str]) -> None:
                     shutil.rmtree(os.path.join(vdir, d), ignore_errors=True)
             if not any(d.startswith("_part=") for d in os.listdir(vdir)):
                 shutil.rmtree(vdir, ignore_errors=True)
-    if os.path.isdir(sink_dir):  # tmp manifests from crashed commits
-        for f in os.listdir(sink_dir):
-            if f.startswith(f".{MANIFEST_NAME}.tmp-"):
-                os.remove(os.path.join(sink_dir, f))
 
 
 def read_sink(

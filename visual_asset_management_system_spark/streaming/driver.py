@@ -1,4 +1,4 @@
-"""The two protocols every maintained store shares, defined once.
+"""The protocols every maintained store shares, defined once.
 
 **Micro-batch driver.** Every ``start_*_stream`` wrapper is the same
 Structured Streaming loop: a file-source stream, ``foreachBatch``
@@ -21,10 +21,18 @@ empty store. Plain POSIX renames cannot make the pair atomic; the
 CDC merge sinks (streaming/cdc.py) therefore use no swap at all —
 they publish immutable data directories through one atomic manifest
 commit, the pattern an object store needs. Single writer per store.
+
+**JSON commit.** Every small JSON file a store commits (the CDC
+manifest, the ANN and bottom-k sidecars) is replaced by
+:func:`commit_json`: a fixed temp sibling, fsynced before the rename,
+so a power loss leaves the old file or the new one — never an empty
+or torn file under the live name, which the stores' strict sidecar
+checks would refuse.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 from typing import Callable
@@ -93,3 +101,19 @@ def swap_dir(tmp: str, live: str) -> None:
         os.replace(live, aside)
     os.replace(tmp, live)
     shutil.rmtree(aside, ignore_errors=True)
+
+
+def commit_json(path: str, obj) -> None:
+    """Atomically replace the JSON file ``path`` with ``obj``: write
+    the fixed sibling ``.<name>.tmp``, flush and fsync it, then rename
+    it onto ``path``. A crash leaves the old file or the new one; the
+    next commit overwrites a leftover temp file. Single writer per
+    file."""
+    parent, name = os.path.split(path)
+    os.makedirs(parent, exist_ok=True)
+    tmp = os.path.join(parent, f".{name}.tmp")
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, path)
